@@ -58,6 +58,11 @@ Scale design:
   hard-linked and keeps its index rows verbatim. Cost is proportional
   to the touched files, not the table — at 100 TB, deleting one
   user's rows from a user-clustered table rewrites a handful of files.
+  MERGE collects its delta-sized source to the driver once as Arrow:
+  the duplicate-key check, the key bounds and the split into
+  postimage and insert rows run in pyarrow, and the source re-enters
+  Spark as a ``LocalRelation`` with exact statistics, so every join
+  against it broadcasts without a shuffle and nothing is persisted.
 - METADATA PLANE: every committed version carries a ``_manifest``
   (one row per data file: relative name + size, landed before the
   marker like the index). Reads, DML attribution, and history() plan
@@ -206,22 +211,16 @@ def _job_label(spark, desc: str):
 
 @contextlib.contextmanager
 def _delta_plan_scope(spark):
-    """Compile a DML plan's PERSISTED frames without AQE. Spark
-    compiles a cached plan's physical plan at ``persist()`` call time
-    (CacheManager.cacheQuery), so the session's AQE flag AT THAT MOMENT
-    decides how the cache later materializes: with AQE captured, every
-    Exchange inside the cached plan becomes its own stage-job on first
-    use (measured: the merge validate+bounds collect ran as 3 jobs and
-    the plan cache fill as 7 — the extra jobs are AQE stage
-    materializations of the cached joins/aggs). The frames persisted
-    here are delta-sized by the DML contract (the MERGE batch and the
-    touched files' rows), their joins are keyed on validated-unique
-    keys (no skew for AQE to split), and the static planner already
-    broadcasts below the threshold once cache statistics are exact —
-    AQE's only observable contribution was one fixed scheduling round
-    per exchange per commit, at any scale. Actions and the commit
-    writes keep their own AQE settings (the labeled metadata actions
-    run AQE-off regardless; the writes compile AQE-on after this scope
+    """Compile a DELETE/UPDATE plan's PERSISTED frame without AQE.
+    Spark compiles a cached plan's physical plan at ``persist()`` call
+    time (CacheManager.cacheQuery), so the session's AQE flag AT THAT
+    MOMENT decides how the cache later materializes: with AQE captured,
+    every Exchange inside the cached plan becomes its own stage-job on
+    first use. The frame persisted here is delta-sized by the DML
+    contract (the touched files' rows), so AQE could only add fixed
+    scheduling rounds to every commit. Actions and the commit writes
+    keep their own AQE settings (the labeled metadata actions run
+    AQE-off regardless; the writes compile AQE-on after this scope
     exits, so output coalescing is unchanged)."""
     old = spark.conf.get("spark.sql.adaptive.enabled", "true")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
@@ -962,7 +961,14 @@ class ManagedTable:
         index candidates for the SOURCE's key min/max — sound, because
         a file outside that range cannot contain a matching key. The
         change feed records update_preimage/update_postimage pairs for
-        matches and insert rows for new keys."""
+        matches and insert rows for new keys. An empty source is a
+        no-op (returns the current version, writes nothing).
+
+        The source is delta-sized by contract and is COLLECTED TO THE
+        DRIVER once, as Arrow: a source larger than
+        ``spark.driver.maxResultSize`` fails loudly in that collect,
+        before anything is written, instead of merging slowly. Split
+        such a source into several merges."""
         keys = (keys,) if isinstance(keys, str) else tuple(keys)
         if self.concurrency == "optimistic":
             # compute against a pinned base with NO lock held; the
@@ -975,21 +981,17 @@ class ManagedTable:
             plan = self._merge_plan(current, source, keys, when_matched)
             if plan is None:
                 return current
-            scan_files, touched, new_df, cdf, bounds, cached = plan
-            try:
-                return self._commit_cow_optimistic(
-                    current,
-                    scan_files,
-                    touched,
-                    new_df,
-                    cdf,
-                    "merge",
-                    stream_batch_id=stream_batch_id,
-                    merge_bounds=bounds,
-                )
-            finally:
-                for c in cached:
-                    c.unpersist()
+            scan_files, touched, new_df, cdf, bounds = plan
+            return self._commit_cow_optimistic(
+                current,
+                scan_files,
+                touched,
+                new_df,
+                cdf,
+                "merge",
+                stream_batch_id=stream_batch_id,
+                merge_bounds=bounds,
+            )
         with dataset_write_lock(self.path, "managed_merge"):
             current = latest_version(self.path)
             if current is None:
@@ -999,23 +1001,18 @@ class ManagedTable:
             plan = self._merge_plan(current, source, keys, when_matched)
             if plan is None:
                 return current
-            _scan_files, touched, new_df, cdf, _bounds, cached = plan
+            _scan_files, touched, new_df, cdf, _bounds = plan
             prev = _version_dir(self.path, current)
-            all_files = _data_files(prev)
-            try:
-                return self._commit_cow(
-                    current,
-                    prev,
-                    all_files,
-                    touched,
-                    new_df,
-                    cdf,
-                    "merge",
-                    stream_batch_id=stream_batch_id,
-                )
-            finally:
-                for c in cached:
-                    c.unpersist()
+            return self._commit_cow(
+                current,
+                prev,
+                _data_files(prev),
+                touched,
+                new_df,
+                cdf,
+                "merge",
+                stream_batch_id=stream_batch_id,
+            )
 
     def _merge_plan(
         self,
@@ -1031,7 +1028,18 @@ class ManagedTable:
         when the merge is a no-op. ``key_bounds`` is ``(col, lo, hi)``
         of the source's leading key when it is indexed (the optimistic
         validator uses it to detect concurrently-added files that could
-        hide a match), else None (validator is then conservative)."""
+        hide a match), else None (validator is then conservative).
+
+        The source is delta-sized by the MERGE contract, so it is
+        collected ONCE as Arrow: validation, bounds and the split into
+        postimage and insert rows run in pyarrow, and every frame built
+        from it is a ``LocalRelation`` with exact statistics — each
+        join against it broadcasts without a shuffle, and the lineage
+        never re-runs, so nothing is persisted."""
+        import numpy as np
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
         prev = _version_dir(self.path, current)
         all_files = _data_files(prev)
         tgt_schema = self.stored_schema(current)
@@ -1047,71 +1055,15 @@ class ManagedTable:
         missing = [k for k in keys if k not in tgt_cols]
         if missing:
             raise ValueError(f"merge keys not in schema: {missing}")
-        # collision-proof internal tag/count names: any user column —
-        # including the once-reserved "__matched" — just pushes the
-        # generated name further instead of raising
-        tag = "__bdl_matched__"
-        while tag in tgt_cols:
-            tag += "_"
-        ncol = "__bdl_n__"
-        while ncol in tgt_cols:
-            ncol += "_"
-        # the source (delta-sized by the MERGE contract) feeds the
-        # validation scan, the attribution semi-join, the rewrite and
-        # the change feed — persist it so each downstream action reads
-        # the materialized batch instead of re-running its lineage.
-        # Everything persisted during planning is registered in
-        # ``cached``: the except handler unpersists on ANY planning
-        # failure (persists must not outlive a failed plan), the no-op
-        # path unpersists before returning None, and the caller's
-        # finally unpersists once the commit has landed.
-        with _delta_plan_scope(self.spark):
-            source = source.select(*tgt_cols).persist()
-            cached = [source]
-            try:
-                return self._merge_plan_build(
-                    current, source, keys, when_matched, tgt_schema,
-                    tgt_cols, all_files, tag, ncol, cached,
-                )
-            except BaseException:
-                for c in cached:
-                    c.unpersist()
-                raise
-
-    def _merge_plan_build(
-        self,
-        current: int,
-        source: DataFrame,
-        keys: tuple[str, ...],
-        when_matched: Column | str | None,
-        tgt_schema,
-        tgt_cols: list[str],
-        all_files: list[str],
-        tag: str,
-        ncol: str,
-        cached: list[DataFrame],
-    ):
-        """Body of :meth:`_merge_plan` after source validation/persist
-        (split out so the persist-cleanup wrapper stays flat)."""
-        # ONE pass over the GROUPED source keys settles validation AND
-        # pruning (and materializes both persisted frames): the
-        # duplicate-key check and the leading-key bounds run as a
-        # single action — and the grouped frame is persisted and
-        # reused as the distinct key set by both downstream joins, so
-        # neither pays its own .distinct() exchange per action.
-        src_keys_n = (
-            source.groupBy(*keys)
-            .agg(F.count(F.lit(1)).alias(ncol))
-            .persist()
-        )
-        cached.append(src_keys_n)
-        with _metadata_action(self.spark, "managed merge: validate+bounds"):
-            stats = src_keys_n.agg(
-                F.max(ncol).alias("max_n"),
-                F.min(keys[0]).alias("lo"),
-                F.max(keys[0]).alias("hi"),
-            ).collect()[0]
-        if (stats["max_n"] or 0) > 1:
+        source = source.select(*tgt_cols)
+        src_schema = source.schema
+        with _job_label(self.spark, "managed merge: collect source"):
+            tbl = source.toArrow()
+        if tbl.num_rows == 0:
+            return None  # nothing to match, nothing to insert
+        # NULL keys group together, as in Spark's groupBy: two NULL-key
+        # rows are a duplicate even though neither can ever match
+        if tbl.group_by(list(keys)).aggregate([]).num_rows < tbl.num_rows:
             raise ValueError(
                 "merge_into source has duplicate keys — the merge "
                 "result would be nondeterministic; dedupe first "
@@ -1121,89 +1073,65 @@ class ManagedTable:
         # leading-key stats miss the source's key range cannot match
         scan_files = all_files
         key_bounds = None
-        if keys[0] in self.index_cols and stats["lo"] is not None:
-            key_bounds = (keys[0], stats["lo"], stats["hi"])
-            scan_files = self.candidate_files(
-                keys[0], stats["lo"], stats["hi"], current
+        lo, hi = (v.as_py() for v in pc.min_max(tbl[keys[0]]).values())
+        if keys[0] in self.index_cols and lo is not None:
+            key_bounds = (keys[0], lo, hi)
+            scan_files = self.candidate_files(keys[0], lo, hi, current)
+
+        def local(t):
+            # an all-false filter leaves zero chunks per column, which
+            # the Arrow-to-Spark conversion of timestamps rejects
+            return self.spark.createDataFrame(
+                t if t.num_rows else tbl.slice(0, 0), schema=src_schema
             )
-        src_keys = src_keys_n.select(*keys)  # unique by construction
-        scanned = self._with_file(current, scan_files, tgt_schema)
-        matched = scanned.join(src_keys, on=list(keys), how="leftsemi")
-        # metadata-sized: bounded by the snapshot file count. ONE
-        # global aggregation (partial collect_set per partition →
-        # final single-partition merge) instead of the extra exchange
-        # distinct().collect() paid. collect_set drops NULLs, so the
-        # path-normalization guard compares row counts to stay loud.
-        with _metadata_action(self.spark, "managed merge: attribution"):
-            att = matched.agg(
-                F.collect_set("__file").alias("fs"),
-                F.count(F.lit(1)).alias("n_rows"),
-                F.count("__file").alias("n_mapped"),
-            ).collect()[0]
-        if att["n_rows"] != att["n_mapped"]:
+
+        src = local(tbl)
+        src_keys = src.select(*keys)  # unique, checked above
+        # ONE action attributes matches: the matched target rows' keys
+        # and files (bounded by the source size times duplicate target
+        # keys — delta-sized)
+        matched = self._with_file(current, scan_files, tgt_schema).join(
+            src_keys, on=list(keys), how="leftsemi"
+        )
+        with _job_label(self.spark, "managed merge: attribution"):
+            att = matched.select(*keys, "__file").toArrow()
+        if att["__file"].null_count:
             raise RuntimeError(
                 "merge attribution could not map a scanned file path "
                 "back to the manifest — path normalization mismatch"
             )
-        touched = sorted(att["fs"] or [])
-        if not touched and (
-            source.join(
-                scanned.select(*keys), on=list(keys), how="leftanti"
-            ).limit(1).count()
-            == 0
-        ):
-            for c in cached:
-                c.unpersist()
-            cached.clear()
-            return None  # nothing matched, nothing to insert
-        # the touched files' rows feed the rewrite AND the change feed
-        # (plus the range-sampling pass of the clustered write) —
-        # persist so they are read from storage once, not per action
-        touched_df = self._read_files(current, touched, tgt_schema).persist()
-        cached.append(touched_df)
-        # tag each SOURCE row once with whether its key exists in the
-        # touched files (match -> update_postimage, no match -> insert)
-        # instead of running separate leftsemi and leftanti joins per
-        # consumer: every downstream frame is then a FILTER over one
-        # persisted join, not its own join re-executed per action.
-        # Equivalent to the old anti join against the full candidate
-        # scan: a source key present in any candidate file makes that
-        # file touched by construction, so candidate-keys ∩ source =
-        # touched-keys ∩ source.
-        src_tagged = source.join(
-            touched_df.select(*keys)
-            .distinct()
-            .withColumn(tag, F.lit(True)),
-            on=list(keys),
-            how="left",
-        ).persist()
-        cached.append(src_tagged)
-        insert_rows = src_tagged.filter(
-            F.col(tag).isNull()
-        ).select(*tgt_cols)
+        touched = sorted(set(att["__file"].to_pylist()))
+        # split the source on the driver: keys found in the touched
+        # files are postimages, the rest inserts (equality never holds
+        # for a NULL key, so NULL-key rows are always inserts)
+        found = att.select(list(keys)).cast(tbl.select(list(keys)).schema)
+        if len(keys) == 1:
+            hit = pc.is_in(
+                tbl[keys[0]], value_set=found[keys[0]].combine_chunks()
+            )
+        else:
+            # join the key columns and a row id only: Arrow's hash join
+            # rejects nested (list/map/struct) non-key columns
+            rid = "__bdl_row__"
+            while rid in tgt_cols:
+                rid += "_"
+            probe = tbl.select(list(keys)).append_column(
+                rid, pa.array(np.arange(tbl.num_rows))
+            )
+            rows = probe.join(found, list(keys), join_type="left semi")
+            mask = np.zeros(tbl.num_rows, dtype=bool)
+            mask[rows[rid].to_numpy()] = True
+            hit = pa.array(mask)
+        insert_rows = local(tbl.filter(pc.invert(hit)))
+        touched_df = self._read_files(current, touched, tgt_schema)
+        # target rows without a source key are rewritten unchanged
+        keep = touched_df.join(src_keys, on=list(keys), how="leftanti")
         if when_matched is None:
-            # same single-join-then-filter shape on the TARGET side:
-            # matched target rows are preimages, unmatched ones are
-            # kept (rewritten unchanged)
-            tagged = touched_df.join(
-                src_keys.withColumn(tag, F.lit(True)),
-                on=list(keys),
-                how="left",
-            ).persist()
-            cached.append(tagged)
-            keep = tagged.filter(F.col(tag).isNull())
-            # rows that replace matched keys + brand-new keys
-            new_df = keep.select(*tgt_cols).unionByName(
-                source.select(*tgt_cols)
-            )
-            pre = tagged.filter(
-                F.col(tag).isNotNull()
-            ).select(*tgt_cols).withColumn(
-                _CHANGE_TYPE, F.lit("update_preimage")
-            )
-            post = src_tagged.filter(
-                F.col(tag).isNotNull()
-            ).select(*tgt_cols).withColumn(
+            new_df = keep.select(*tgt_cols).unionByName(src)
+            pre = touched_df.join(
+                src_keys, on=list(keys), how="leftsemi"
+            ).withColumn(_CHANGE_TYPE, F.lit("update_preimage"))
+            post = local(tbl.filter(hit)).withColumn(
                 _CHANGE_TYPE, F.lit("update_postimage")
             )
         else:
@@ -1213,13 +1141,10 @@ class ManagedTable:
                 else when_matched
             )
             take = F.coalesce(cond, F.lit(False))
-            keep = touched_df.join(
-                src_keys, on=list(keys), how="leftanti"
-            )
             # plain equality, matching the unconditional path and
             # SQL MERGE: NULL keys never match anything
             joined = touched_df.alias("t").join(
-                source.alias("s"),
+                src.alias("s"),
                 on=[
                     F.col(f"t.{k}") == F.col(f"s.{k}")
                     for k in keys
@@ -1241,7 +1166,7 @@ class ManagedTable:
             new_df = (
                 keep.select(*tgt_cols)
                 .unionByName(replaced)
-                .unionByName(insert_rows.select(*tgt_cols))
+                .unionByName(insert_rows)
             )
             pre = joined.filter(take).select(
                 *[F.col(f"t.{c}").alias(c) for c in tgt_cols]
@@ -1258,27 +1183,7 @@ class ManagedTable:
         cdf = pre.select(*tgt_cols, _CHANGE_TYPE).unionByName(
             post.select(*tgt_cols, _CHANGE_TYPE)
         ).unionByName(ins.select(*tgt_cols, _CHANGE_TYPE))
-        # force-fill the persisted frames BOTH overlapped commit writes
-        # read: persist() is lazy and RDD cache fills are unsynchronized
-        # — two concurrent first-consumers each compute the tag-join
-        # lineage until blocks land. Two delta-sized fill passes (run
-        # concurrently themselves) make the rewrite and the change feed
-        # pure cache scans; filling the downstream frame fills its
-        # cached touched_df input on the way.
-        # _metadata_action (AQE off): each fill is a count-to-one-row on
-        # top of the cache materialization, and a cached plan's
-        # partitioning is frozen at persist() time regardless — AQE's
-        # only contribution here is one stage-job per exchange (measured
-        # 11 fill jobs with it, ~5 without). Filling the TAG JOINS (not
-        # just the touched-file base) means each join computes exactly
-        # once; left lazy, the rewrite's sampling pass, the rewrite
-        # write and the two change-feed branches would each re-run them.
-        deep = tagged if when_matched is None else touched_df
-        with _metadata_action(self.spark, "managed merge: plan cache fill"):
-            self._overlap_writes(
-                lambda: deep.count(), lambda: src_tagged.count()
-            )
-        return scan_files, touched, new_df, cdf, key_bounds, cached
+        return scan_files, touched, new_df, cdf, key_bounds
 
     def _cow_rewrite(
         self,
@@ -1440,8 +1345,9 @@ class ManagedTable:
             )
             cdf = pre.unionByName(post)
         # force-fill the persisted touched-file rows before the commit's
-        # two OVERLAPPED writes both race to compute them (same
-        # rationale as the merge plan's fill pass)
+        # two OVERLAPPED writes both race to compute them: persist() is
+        # lazy and RDD cache fills are unsynchronized, so two concurrent
+        # first consumers would each read the touched files
         with _metadata_action(self.spark, f"managed {op}: plan cache fill"):
             touched_df.count()
         return scan_files, touched, new_df, cdf, [touched_df]
@@ -1470,7 +1376,7 @@ class ManagedTable:
     def _overlap_writes(self, rewrite_fn, cdf_fn) -> None:
         """Run the rewrite write and the change-feed write as two
         CONCURRENT Spark jobs (guide §2.6 'overlap independent jobs'):
-        both read only the plan's persisted frames and land in
+        both read only the plan's delta-sized frames and land in
         disjoint directories, so the commit pays max(rewrite, feed)
         wall time instead of their sum — the feed's tasks back-fill
         executor slots the rewrite's tail leaves idle. The feed
@@ -2233,14 +2139,26 @@ class ManagedTable:
             return df.drop("__path").withColumn(
                 "__file", F.lit(None).cast("string")
             )
+        import pyarrow as pa
+
         want = set(files)
+        rows = [r for r in self._rows_of(version) if r["file"] in want]
+        # built from Arrow, the map plans as a LocalRelation: the
+        # broadcast below needs no Spark job (a Python list would plan
+        # as a LogicalRDD and pay one per attribution)
         mapping = self.spark.createDataFrame(
-            [
-                ("/" + os.path.abspath(r["abs"]).lstrip("/"), r["file"])
-                for r in self._rows_of(version)
-                if r["file"] in want
-            ],
-            "__norm string, __file string",
+            pa.table(
+                {
+                    "__norm": [
+                        "/" + os.path.abspath(r["abs"]).lstrip("/")
+                        for r in rows
+                    ],
+                    "__file": [r["file"] for r in rows],
+                },
+                schema=pa.schema(
+                    [("__norm", pa.string()), ("__file", pa.string())]
+                ),
+            )
         )
         df = df.withColumn(
             "__norm",

@@ -408,6 +408,172 @@ def test_managed_merge_upserts_and_inserts(spark, tmp_path):
     want = _rows(t.read().filter(F.col("k").between(0, 30)))
     assert got == want
 
+    # an empty source is a no-op: the current version comes back and
+    # no version directory is written
+    before = sorted(os.listdir(str(tmp_path / "t")))
+    assert t.merge_into(src.filter("k < 0"), "k") == v
+    assert sorted(os.listdir(str(tmp_path / "t"))) == before
+
+    # a NULL source key never matches, not even a stored NULL key: it
+    # is inserted each time
+    nul = spark.createDataFrame(
+        [(None, 0.5, "null"), (30, -3.0, "upd")],
+        "k long, score double, tag string",
+    )
+    v3 = t.merge_into(nul, "k")
+    assert {
+        (r["_change_type"], r["k"]) for r in t.changes(v3).collect()
+    } == {
+        ("insert", None), ("update_preimage", 30), ("update_postimage", 30)
+    }
+    v4 = t.merge_into(nul.filter("k IS NULL"), "k")
+    assert v4 == v3 + 1
+    assert [r["tag"] for r in t.read(v4).filter("k IS NULL").collect()] == [
+        "null", "null",
+    ]
+    assert [
+        (r["_change_type"], r["k"]) for r in t.changes(v4).collect()
+    ] == [("insert", None)]
+    # two NULL-key source rows group together: a duplicate key
+    with pytest.raises(ValueError, match="duplicate keys"):
+        t.merge_into(
+            nul.filter("k IS NULL").unionAll(nul.filter("k IS NULL")), "k"
+        )
+
+    # duplicate TARGET keys all collapse to the one source row
+    t.append(
+        spark.createDataFrame(
+            [(40, 1.0, "dup")], "k long, score double, tag string"
+        )
+    )
+    assert t.read().filter("k = 40").count() == 2
+    v6 = t.merge_into(
+        spark.createDataFrame(
+            [(40, -4.0, "one")], "k long, score double, tag string"
+        ),
+        "k",
+    )
+    assert _rows(t.read(v6).filter("k = 40")) == [(40, -4.0, "one")]
+    assert sorted(
+        (r["_change_type"], r["tag"]) for r in t.changes(v6).collect()
+    ) == [
+        ("update_postimage", "one"),
+        ("update_preimage", "5"),
+        ("update_preimage", "dup"),
+    ]
+    assert t.read(v6).count() == 603
+
+
+def test_managed_merge_composite_keys(spark, tmp_path):
+    """MERGE on a composite key (user_id, day): a row matches only when
+    every key column is equal, a NULL in any key column never matches,
+    the change feed pairs images per composite key, and a duplicate
+    composite key (NULL components included) is refused. The timestamp
+    and array columns ride along: the all-matched merge splits off an
+    EMPTY insert set, which must still convert, and nested columns
+    must not reach a key join."""
+    import datetime
+
+    t0 = datetime.datetime(2024, 1, 1)
+
+    def df(rows):
+        return spark.createDataFrame(
+            [
+                (*r, t0 + datetime.timedelta(seconds=r[2]), [str(r[2])])
+                for r in rows
+            ],
+            "user_id long, day string, clicks long, seen timestamp, "
+            "tags array<string>",
+        )
+
+    def triples(frame):
+        return sorted(
+            ((r["user_id"], r["day"], r["clicks"]) for r in frame.collect()),
+            key=repr,
+        )
+
+    t = ManagedTable(spark, str(tmp_path / "t"), index_cols=("user_id",))
+    t.write(
+        df(
+            [(1, "d1", 10), (1, "d2", 20), (2, "d1", 30), (3, None, 40)]
+        ).repartition(2)
+    )
+    src = df([(1, "d2", 21), (2, "d2", 31), (3, None, 41), (4, "d1", 50)])
+    v = t.merge_into(src, ("user_id", "day"))
+    assert triples(t.read(v)) == sorted(
+        [
+            (1, "d1", 10), (1, "d2", 21), (2, "d1", 30), (2, "d2", 31),
+            (3, None, 40), (3, None, 41), (4, "d1", 50),
+        ],
+        key=repr,
+    )
+    assert sorted(
+        (r["_change_type"], r["user_id"], r["day"], r["clicks"])
+        for r in t.changes(v).collect()
+    ) == [
+        ("insert", 2, "d2", 31),
+        ("insert", 3, None, 41),
+        ("insert", 4, "d1", 50),
+        ("update_postimage", 1, "d2", 21),
+        ("update_preimage", 1, "d2", 20),
+    ]
+
+    # under a MATCHED condition each composite key is decided alone
+    v2 = t.merge_into(
+        df([(1, "d1", 5), (2, "d2", 99)]),
+        ("user_id", "day"),
+        when_matched="s.clicks >= t.clicks",
+    )
+    got = {(r["user_id"], r["day"]): r for r in t.read(v2).collect()}
+    assert got[(1, "d1")]["clicks"] == 10
+    assert got[(2, "d2")]["clicks"] == 99
+    assert got[(2, "d2")]["seen"] == t0 + datetime.timedelta(seconds=99)
+    assert got[(2, "d2")]["tags"] == ["99"]
+    assert {
+        (r["_change_type"], r["clicks"]) for r in t.changes(v2).collect()
+    } == {("update_preimage", 31), ("update_postimage", 99)}
+
+    with pytest.raises(ValueError, match="duplicate keys"):
+        t.merge_into(df([(5, None, 1), (5, None, 2)]), ("user_id", "day"))
+
+
+def test_managed_merge_releases_cache_and_bounds_jobs(spark, tmp_path):
+    """MERGE leaves no persisted RDD behind, whether it commits or
+    refuses duplicate keys, and a fixed small merge runs a bounded
+    number of Spark jobs, so per-commit cache-fill passes cannot creep
+    back in."""
+    import uuid
+
+    sc = spark.sparkContext
+    t = ManagedTable(spark, str(tmp_path / "t"), index_cols=("k",))
+    t.write(_mk(spark, 0, 600).repartitionByRange(6, "k").sortWithinPartitions("k"))
+    src = spark.createDataFrame(
+        [(10, -1.0, "upd"), (20, -2.0, "upd"), (900, -9.0, "new")],
+        "k long, score double, tag string",
+    )
+    n_cached = sc._jsc.getPersistentRDDs().size()
+    group = f"managed-merge-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "managed merge job count")
+    try:
+        v = t.merge_into(src, "k")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert v == 2 and t.read().count() == 601
+    # measured: 1 source collect, 3 for attribution (two LocalRelation
+    # broadcasts and the scan), 4 for the rewrite write (a broadcast,
+    # the range sample, the shuffle map stage and the write) and 2 for
+    # the change-feed write (a broadcast and the write); the
+    # persist-and-fill plan ran 12
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert 0 < n_jobs <= 10, n_jobs
+    assert sc._jsc.getPersistentRDDs().size() <= n_cached
+
+    with pytest.raises(ValueError, match="duplicate keys"):
+        t.merge_into(src.unionAll(src), "k")
+    assert sc._jsc.getPersistentRDDs().size() <= n_cached
+    assert t.latest() == 2
+
 
 def test_managed_changes_derivations(spark, tmp_path):
     """changes(): v1 = all inserts, append = the appended rows (derived
@@ -529,6 +695,23 @@ def test_managed_merge_when_matched_condition(spark, tmp_path):
         ("update_postimage", 1),
         ("insert", 9),
     }
+
+    # duplicate TARGET keys are decided row by row under a condition:
+    # only the stored row the source is newer than is replaced
+    t.append(
+        spark.createDataFrame([(3, 40, "c2")], "k long, seq long, val string")
+    )
+    v2 = t.merge_into(
+        spark.createDataFrame([(3, 35, "mid")], "k long, seq long, val string"),
+        "k",
+        when_matched="s.seq >= t.seq",
+    )
+    assert sorted(
+        (r["seq"], r["val"]) for r in t.read(v2).filter("k = 3").collect()
+    ) == [(35, "mid"), (40, "c2")]
+    assert sorted(
+        (r["_change_type"], r["seq"]) for r in t.changes(v2).collect()
+    ) == [("update_postimage", 35), ("update_preimage", 30)]
 
 
 def test_managed_merge_stream_exactly_once(spark, tmp_path):
@@ -1361,7 +1544,7 @@ def test_managed_optimistic_overlapping_dml_aborts(spark, tmp_path):
     # MERGE vs concurrent append: overlap in the source key range aborts
     src_overlap = _mk(spark, 1500, 1510, parts=1)
     plan_m = t._merge_plan(2, src_overlap, ("k",), None)
-    scan_m, touched_m, new_dfm, cdfm, bounds, _cm = plan_m
+    scan_m, touched_m, new_dfm, cdfm, bounds = plan_m
     assert bounds == ("k", 1500, 1509)
     t.append(_mk(spark, 1505, 1520, parts=1))  # v3 adds keys IN range
     with pytest.raises(CommitConflictError, match="overlap"):
@@ -1373,7 +1556,7 @@ def test_managed_optimistic_overlapping_dml_aborts(spark, tmp_path):
     # MERGE vs concurrent append OUTSIDE the range: rebases and commits
     src_safe = _mk(spark, 5000, 5005, parts=1)
     plan_s = t._merge_plan(3, src_safe, ("k",), None)
-    scan_s, touched_s, new_dfs, cdfs, bounds_s, _cs = plan_s
+    scan_s, touched_s, new_dfs, cdfs, bounds_s = plan_s
     t.append(_mk(spark, 9000, 9010, parts=1))  # v4, far away
     v5 = t._commit_cow_optimistic(
         3, scan_s, touched_s, new_dfs, cdfs, "merge",
