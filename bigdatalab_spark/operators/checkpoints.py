@@ -1,4 +1,5 @@
-"""Explicit release of ``localCheckpoint`` storage for iterative loops.
+"""Explicit release of ``localCheckpoint`` storage for iterative loops,
+and a checkpoint that reports its row count.
 
 Iterative algorithms (label propagation in scale/dedup.py, BPE training
 in scale/bpe.py) checkpoint each round to keep plan trees constant-size.
@@ -8,12 +9,44 @@ node, and are otherwise only freed when the ContextCleaner notices the
 JVM RDD is garbage. Over many rounds that lag accumulates dead
 MEMORY_AND_DISK blocks. This helper reaches through the analyzed plan
 to that RDD and unpersists it eagerly, so a loop holds at most the
-current round's blocks plus the round being built.
+current round's blocks plus the round being built. The same RDD also
+gives an operator the exact size of what it just materialized, so it
+can pick a strategy from it (``local_checkpoint_count``).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
+
+
+def _checkpoint_rdd(df: DataFrame):
+    """The JVM RDD behind a locally-checkpointed ``df``, seen through
+    pure column projections and aliases, or None if the plan is not a
+    ``LogicalRDD``."""
+    plan = df._jdf.queryExecution().analyzed()
+    while (
+        plan.getClass().getSimpleName() in ("Project", "SubqueryAlias")
+        and plan.children().size() == 1
+    ):
+        plan = plan.children().apply(0)
+    if plan.getClass().getSimpleName() != "LogicalRDD":
+        return None
+    return plan.rdd()
+
+
+def local_checkpoint_count(df: DataFrame) -> tuple[DataFrame, int]:
+    """``localCheckpoint`` ``df`` and materialize it in ONE job that
+    also returns its row count.
+
+    An eager ``localCheckpoint`` materializes by counting the wrapped
+    RDD and throws the count away, so a caller that needs the size pays
+    a second ``count()`` (under AQE a partial aggregate, a shuffle and a
+    final stage over the blocks just written). This checkpoints lazily
+    and runs that one count itself: the blocks land exactly as with
+    ``eager=True`` and the count is kept.
+    """
+    ck = df.localCheckpoint(eager=False)
+    return ck, int(_checkpoint_rdd(ck).count())
 
 
 def release_local_checkpoint(df: DataFrame) -> None:
@@ -29,14 +62,8 @@ def release_local_checkpoint(df: DataFrame) -> None:
     blocks — the caller holds no other handle to them.
     """
     try:
-        plan = df._jdf.queryExecution().analyzed()
-        while (
-            plan.getClass().getSimpleName() in ("Project", "SubqueryAlias")
-            and plan.children().size() == 1
-        ):
-            plan = plan.children().apply(0)
-        if plan.getClass().getSimpleName() != "LogicalRDD":
-            return
-        plan.rdd().unpersist(False)
+        rdd = _checkpoint_rdd(df)
+        if rdd is not None:
+            rdd.unpersist(False)
     except Exception:  # pragma: no cover - best-effort release
         pass

@@ -128,8 +128,8 @@ def bpe_train(
     # round r's rewrite plan would nest all r-1 predecessors (each
     # merge_pair adds several HOF layers) — at tokenizer-scale merge
     # counts that is an unbounded plan-tree blowup, the same failure
-    # mode fixed in connected_components. Checkpointing keeps every
-    # round's plan constant-size; the previous round's blocks are
+    # mode fixed in connected_components' Spark path. Checkpointing
+    # keeps every round's plan constant-size; the previous round's blocks are
     # released as soon as the new round materializes so the loop never
     # accumulates dead token copies waiting on GC-driven cleanup.
     from bigdatalab_spark.operators.checkpoints import release_local_checkpoint

@@ -1456,33 +1456,88 @@ def simhash_near_dups(
     )
 
 
+# Largest pair graph connected_components solves on the driver. At the
+# bound the pairs arrive as two 8-byte Arrow columns, 32 MB, far under
+# the session's 1g spark.driver.maxResultSize and 8g driver heap. The
+# union-find then holds one Python int per endpoint in the driver
+# process, a few hundred MB at most, and takes about 3 s for 2M random
+# edges on one core.
+CC_DRIVER_MAX_EDGES = 2_000_000
+
+
+def _min_label_union_find(src, dst):
+    """Union-find over integer-coded edges: ``(ids, labels)`` where
+    ``ids`` are the sorted distinct endpoints and ``labels[i]`` is the
+    smallest id in ``ids[i]``'s component.
+
+    Ids are coded by their rank in ``ids``, and a union always hangs
+    the larger root under the smaller one, so ``parent[x] <= x`` holds
+    throughout: every root is its component's minimum, and one pass in
+    rank order flattens each node straight onto its root.
+    """
+    import numpy as np
+
+    ids, code = np.unique(np.concatenate([src, dst]), return_inverse=True)
+    parent = list(range(len(ids)))
+    m = len(src)
+    for a, b in zip(code[:m].tolist(), code[m:].tolist()):
+        while parent[a] != a:
+            parent[a] = a = parent[parent[a]]  # path halving
+        while parent[b] != b:
+            parent[b] = b = parent[parent[b]]
+        if a < b:
+            parent[b] = a
+        elif b < a:
+            parent[a] = b
+    for x in range(len(ids)):
+        parent[x] = parent[parent[x]]
+    return ids, ids[parent]
+
+
 def connected_components(
     nodes: DataFrame, edges: DataFrame, max_iter: int = 20
 ) -> DataFrame:
-    """Connected components by iterative min-label propagation.
+    """Connected components of an undirected graph.
 
-    ``nodes``: (doc_id); ``edges``: (doc1, doc2) undirected. Returns
-    (doc_id, cluster_id) where cluster_id is the minimum doc_id in the
-    component — the canonical keeper for near-dup groups.
+    ``nodes``: (doc_id), one row per id; ``edges``: (doc1, doc2),
+    undirected, duplicates, both directions and self-loops allowed.
+    Every edge endpoint must be a doc_id in ``nodes`` (all callers
+    build the pairs from the same documents). Returns (doc_id,
+    cluster_id), one row per node, where cluster_id is the minimum
+    doc_id in the component — the canonical keeper for near-dup
+    groups — with the type of ``nodes.doc_id``.
 
-    Scale design: each iteration is one join + one aggregation (both on
-    the label key); the loop runs O(diameter) times — near-dup clusters
-    are shallow (pairs/triangles), so 3-4 iterations in practice.
-    Results are cached per iteration and the loop exits on a fixpoint
-    (no label changed). This is the GraphX-free label propagation used
-    for dedup clustering on large corpora.
+    The pair projection is checkpointed once on entry, so the pair
+    lineage (for LSH near-dups: shingle -> MinHash -> band -> verify)
+    runs exactly once, and the job that materializes it also counts it
+    (``local_checkpoint_count``). The count picks the path, the way
+    Shark's partial DAG execution picks a strategy from sizes seen at a
+    materialization boundary:
+
+    - at most ``CC_DRIVER_MAX_EDGES`` pairs: the pairs are collected as
+      Arrow and solved by union-find on the driver. The non-singleton labels come
+      back as a ``LocalRelation`` that ``nodes`` left-joins; a node
+      without a label is its own cluster. ``max_iter`` does not apply.
+    - above the bound: iterative min-label propagation in Spark, one
+      join + one aggregation per round over the checkpointed pairs,
+      O(diameter) rounds until no label changes. Each round is
+      checkpointed so plans stay constant-size, and the previous
+      round's blocks are released as soon as the next one is written.
+      A component with diameter > ``max_iter`` is split and a warning
+      is logged. The result is the last round's checkpoint, freed only
+      by the ContextCleaner once it is unreferenced.
     """
-    from pyspark import StorageLevel
+    from bigdatalab_spark.operators.checkpoints import (
+        local_checkpoint_count,
+        release_local_checkpoint,
+    )
 
-    # the edge list is re-joined EVERY iteration; without a persist each
-    # iteration recomputes the edges' full upstream lineage (for LSH
-    # near-dup pairs that is the entire shingle->minhash->band->jaccard
-    # pipeline, times O(diameter)). Edges are pair-sized — tiny relative
-    # to the corpus — so persist is the right call at any scale.
-    sym = (
-        edges.select(F.col("doc1").alias("src"), F.col("doc2").alias("dst"))
-        .union(edges.select(F.col("doc2").alias("src"), F.col("doc1").alias("dst")))
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    pairs, n_pairs = local_checkpoint_count(edges.select("doc1", "doc2"))
+    if n_pairs <= CC_DRIVER_MAX_EDGES:
+        return _components_on_driver(nodes, pairs)
+    sym = pairs.select(F.col("doc1").alias("src"), F.col("doc2").alias("dst")).union(
+        pairs.select(F.col("doc2").alias("src"), F.col("doc1").alias("dst"))
+    )
     # localCheckpoint (not cache) each round: caching keeps the logical
     # plan, so iteration r's plan NESTS all r-1 predecessors — plan
     # trees grow without bound and large edge sets OOM the driver on
@@ -1493,8 +1548,6 @@ def connected_components(
     # the new round is materialized (release_local_checkpoint), so the
     # loop holds exactly one round of label blocks instead of leaving
     # r-1 dead block sets for the ContextCleaner's GC lag.
-    from bigdatalab_spark.operators.checkpoints import release_local_checkpoint
-
     labels = (
         nodes.select(F.col("doc_id"), F.col("doc_id").alias("cluster_id"))
         .localCheckpoint(eager=True)
@@ -1559,10 +1612,36 @@ def connected_components(
             max_iter,
             max_iter,
         )
-    # labels were materialized by the change-detection count each
-    # iteration, so the edge cache is no longer needed
-    sym.unpersist()
+    # the labels are materialized, so the pair blocks are dead
+    release_local_checkpoint(pairs)
     return labels
+
+
+def _components_on_driver(nodes: DataFrame, pairs: DataFrame) -> DataFrame:
+    """The driver path of :func:`connected_components`: collect the
+    checkpointed ``pairs``, release them, and hand the non-singleton
+    labels back as a ``LocalRelation`` for ``nodes`` to left-join."""
+    import pyarrow as pa
+    from pyspark.sql.types import StructField, StructType
+
+    from bigdatalab_spark.operators.checkpoints import release_local_checkpoint
+
+    id_type = nodes.schema["doc_id"].dataType
+    tbl = pairs.toArrow()
+    release_local_checkpoint(pairs)
+    ids, labels = _min_label_union_find(
+        tbl.column("doc1").to_numpy(), tbl.column("doc2").to_numpy()
+    )
+    moved = labels != ids
+    label_map = nodes.sparkSession.createDataFrame(
+        pa.table({"doc_id": ids[moved], "_label": labels[moved]}),
+        schema=StructType(
+            [StructField("doc_id", id_type), StructField("_label", id_type)]
+        ),
+    )
+    return nodes.select("doc_id").join(label_map, "doc_id", "left").select(
+        "doc_id", F.coalesce("_label", "doc_id").alias("cluster_id")
+    )
 
 
 def save_banded_signatures(

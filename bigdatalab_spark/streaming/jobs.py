@@ -543,7 +543,8 @@ def managed_merge_batch(
     """One :func:`managed_merge_stream` micro-batch, exposed for direct
     replay testing: skip if the table already committed this batch id,
     else within-batch collapse + conditional merge (or first-snapshot
-    write). Returns True iff the batch was applied."""
+    write). Returns True iff a version was committed: False for a
+    replayed or empty batch."""
     last = table.last_stream_batch()
     if last is not None and batch_id <= last:
         return False  # replay of an already-committed batch
@@ -559,9 +560,10 @@ def managed_merge_batch(
         updates = packed.select(
             *keys, *[F.col(f"_w.{c}").alias(c) for c in rest]
         ).select(*batch_df.columns)
-    if updates.isEmpty():
-        return False
-    if table.latest() is None:
+    current = table.latest()
+    if current is None:
+        if updates.isEmpty():
+            return False
         lead = key_cols[0]
         table.write(
             updates.repartitionByRange(
@@ -570,7 +572,9 @@ def managed_merge_batch(
             stream_batch_id=batch_id,
         )
         return True
-    table.merge_into(
+    # no emptiness probe here: merge_into collects the source anyway and
+    # returns the current version, writing nothing, when it is empty
+    return table.merge_into(
         updates,
         tuple(key_cols),
         when_matched=(
@@ -579,8 +583,7 @@ def managed_merge_batch(
             else None
         ),
         stream_batch_id=batch_id,
-    )
-    return True
+    ) != current
 
 
 def embedding_ingest_stream(

@@ -822,6 +822,34 @@ def test_managed_merge_stream_exactly_once(spark, tmp_path):
     ) is False
 
 
+@pytest.mark.parametrize("order_col", [None, "seq"])
+def test_managed_merge_batch_empty_commits_nothing(spark, tmp_path, order_col):
+    """An empty micro-batch returns False and writes no version
+    directory, before the first snapshot and on the merge path, with
+    and without the order_col collapse; a non-empty one commits."""
+    from bigdatalab_spark.streaming.jobs import managed_merge_batch
+
+    schema = "k long, seq long, val string"
+    root = str(tmp_path / "t")
+    t = ManagedTable(spark, root, index_cols=("k",))
+    empty = spark.createDataFrame([], schema)
+    assert managed_merge_batch(t, empty, 0, ("k",), order_col=order_col) is False
+    assert t.latest() is None
+    one = spark.createDataFrame([(1, 1, "a")], schema)
+    assert managed_merge_batch(t, one, 0, ("k",), order_col=order_col) is True
+    before = sorted(os.listdir(root))
+    assert managed_merge_batch(t, empty, 1, ("k",), order_col=order_col) is False
+    assert sorted(os.listdir(root)) == before
+    assert t.latest() == 1 and t.last_stream_batch() == 0
+    two = spark.createDataFrame([(1, 2, "b"), (2, 1, "c")], schema)
+    assert managed_merge_batch(t, two, 2, ("k",), order_col=order_col) is True
+    assert t.latest() == 2 and t.last_stream_batch() == 2
+    assert sorted((r["k"], r["val"]) for r in t.read().collect()) == [
+        (1, "b"),
+        (2, "c"),
+    ]
+
+
 def test_managed_rowgroup_index_prunes_inside_kept_files(spark, tmp_path):
     """rowgroup_index=True commits a per-(file, row group, col) index
     with each snapshot: a 2-D predicate keeps fewer row groups than

@@ -1079,12 +1079,40 @@ def test_release_local_checkpoint_frees_blocks(spark):
     assert n_persisted() == base
 
 
-def test_connected_components_holds_one_round_of_blocks(spark):
-    """Label propagation releases round r-1's checkpoint when round r
-    materializes: after convergence only the FINAL labels frame (plus
-    nothing else from the loop) remains in storage."""
+def test_local_checkpoint_count_materializes_in_one_job(spark):
+    """The job that writes the checkpoint blocks also returns the row
+    count: one job, the blocks are stored, and release frees them."""
+    import uuid
+
+    from bigdatalab_spark.operators.checkpoints import (
+        local_checkpoint_count,
+        release_local_checkpoint,
+    )
+
+    sc = spark.sparkContext
+    base = len(sc._jsc.sc().getRDDStorageInfo())
+    group = f"checkpoint-count-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "checkpoint count")
+    try:
+        ck, n = local_checkpoint_count(spark.range(100).filter("id % 3 = 0"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert n == 34
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    assert len(sc._jsc.sc().getRDDStorageInfo()) == base + 1
+    assert ck.count() == 34
+    release_local_checkpoint(ck)
+    assert len(sc._jsc.sc().getRDDStorageInfo()) == base
+
+
+def test_connected_components_holds_one_round_of_blocks(spark, monkeypatch):
+    """The driver path releases the pair checkpoint it collected and
+    leaves no blocks. The Spark path releases round r-1's checkpoint
+    when round r materializes: after convergence only the FINAL labels
+    frame (plus nothing else from the loop) remains in storage."""
     from bigdatalab_spark.operators.checkpoints import release_local_checkpoint
-    from bigdatalab_spark.scale.dedup import connected_components
+    from bigdatalab_spark.scale import dedup
 
     sc = spark.sparkContext
     base = len(sc._jsc.sc().getRDDStorageInfo())
@@ -1093,13 +1121,125 @@ def test_connected_components_holds_one_round_of_blocks(spark):
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(5)], "doc1 int, doc2 int"
     )
-    labels = connected_components(nodes, edges, max_iter=10)
+    labels = dedup.connected_components(nodes, edges, max_iter=10)
+    got = {r["doc_id"]: r["cluster_id"] for r in labels.collect()}
+    assert got == {i: 0 for i in range(6)}
+    assert len(sc._jsc.sc().getRDDStorageInfo()) == base
+
+    monkeypatch.setattr(dedup, "CC_DRIVER_MAX_EDGES", 0)
+    labels = dedup.connected_components(nodes, edges, max_iter=10)
     got = {r["doc_id"]: r["cluster_id"] for r in labels.collect()}
     assert got == {i: 0 for i in range(6)}
     # only the final labels checkpoint remains persisted
     assert len(sc._jsc.sc().getRDDStorageInfo()) == base + 1
     release_local_checkpoint(labels)
     assert len(sc._jsc.sc().getRDDStorageInfo()) == base
+
+
+def _bfs_min_labels(node_ids, edges):
+    """Reference components: breadth-first search from every unlabeled
+    node, each component labeled with its smallest id."""
+    adj = {n: set() for n in node_ids}
+    for a, b in edges:
+        adj[a].add(b)
+        adj[b].add(a)
+    out = {}
+    for n in node_ids:
+        if n in out:
+            continue
+        seen, frontier = {n}, [n]
+        while frontier:
+            frontier = [m for x in frontier for m in adj[x] if m not in seen]
+            seen.update(frontier)
+        out.update(dict.fromkeys(seen, min(seen)))
+    return out
+
+
+_CC_GRAPHS = {
+    # diameter 24, beyond the default max_iter=20
+    "chain25": (list(range(25)), [(i, i + 1) for i in range(24)]),
+    "isolated": (list(range(10)), [(1, 2), (5, 6), (6, 7)]),
+    "no_edges": ([4, 2, 7], []),
+    "self_loops": ([1, 2, 3, 4, 5], [(3, 3), (1, 2), (2, 2), (4, 4)]),
+    "only_self_loops": ([1, 2, 3], [(2, 2), (3, 3)]),
+    # the minimum is reached last, through a chain of larger ids
+    "dups_both_directions": (
+        [30, 1, 5, 2, 9, 8, 7, 40],
+        [(5, 30), (30, 5), (30, 5), (2, 30), (9, 8), (8, 9), (40, 7), (7, 2), (5, 1)],
+    ),
+}
+
+
+@pytest.mark.parametrize("id_type", ["int", "long"])
+@pytest.mark.parametrize("graph", sorted(_CC_GRAPHS))
+def test_connected_components_paths_agree(spark, monkeypatch, graph, id_type):
+    """The driver path (union-find) and the Spark path (min-label
+    propagation, forced by a zero bound) give the same labels as a
+    plain BFS reference, and keep the input id type."""
+    from bigdatalab_spark.operators.checkpoints import release_local_checkpoint
+    from bigdatalab_spark.scale import dedup
+
+    node_ids, pairs = _CC_GRAPHS[graph]
+    nodes = spark.createDataFrame([(n,) for n in node_ids], f"doc_id {id_type}")
+    edges = spark.createDataFrame(pairs, f"doc1 {id_type}, doc2 {id_type}")
+    want = _bfs_min_labels(node_ids, pairs)
+
+    driver = dedup.connected_components(nodes, edges)
+    monkeypatch.setattr(dedup, "CC_DRIVER_MAX_EDGES", 0)
+    on_spark = dedup.connected_components(nodes, edges, max_iter=30)
+    for out in (driver, on_spark):
+        assert [f.dataType for f in out.schema.fields] == [
+            nodes.schema["doc_id"].dataType
+        ] * 2
+        assert out.columns == ["doc_id", "cluster_id"]
+        rows = out.collect()
+        assert len(rows) == len(node_ids)
+        assert {r["doc_id"]: r["cluster_id"] for r in rows} == want
+    release_local_checkpoint(on_spark)
+
+
+def test_connected_components_spark_path_warns_short_of_fixpoint(
+    spark, monkeypatch, caplog
+):
+    """With max_iter below the diameter the Spark path returns split
+    labels and says so; the driver path is exact whatever max_iter."""
+    import logging
+
+    from bigdatalab_spark.operators.checkpoints import release_local_checkpoint
+    from bigdatalab_spark.scale import dedup
+
+    node_ids, pairs = _CC_GRAPHS["chain25"]
+    nodes = spark.createDataFrame([(n,) for n in node_ids], "doc_id long")
+    edges = spark.createDataFrame(pairs, "doc1 long, doc2 long")
+    caplog.set_level(logging.WARNING, logger=dedup.__name__)
+
+    driver = dedup.connected_components(nodes, edges, max_iter=5)
+    assert {r["cluster_id"] for r in driver.collect()} == {0}
+    assert "fixpoint not reached" not in caplog.text
+
+    monkeypatch.setattr(dedup, "CC_DRIVER_MAX_EDGES", 0)
+    on_spark = dedup.connected_components(nodes, edges, max_iter=5)
+    assert len({r["cluster_id"] for r in on_spark.collect()}) > 1
+    assert "fixpoint not reached after 5 iterations" in caplog.text
+    release_local_checkpoint(on_spark)
+
+
+def test_connected_components_callers_leave_no_persisted_rdds(spark):
+    """The three connected-components queries leave no checkpoint
+    behind at sf0.01: once their caches are cleared, as between
+    queries, no more RDDs are persisted than before they ran."""
+    from tests.conftest import SF_DIR_ORACLE
+    from bigdatalab_spark.queries.datapipe import cluster_split_decontam
+    from bigdatalab_spark.queries.dedup import dedup_clusters
+    from bigdatalab_spark.queries.pipeline import curation_pipeline
+
+    sc = spark.sparkContext
+    spark.catalog.clearCache()
+    before = sc._jsc.getPersistentRDDs().size()
+    for q in (dedup_clusters, curation_pipeline, cluster_split_decontam):
+        assert q(spark, SF_DIR_ORACLE).collect()
+        spark.catalog.clearCache()
+        assert sc._jsc.getPersistentRDDs().size() <= before, q.__name__
 
 
 def test_span_dedup_c4_semantics(spark):

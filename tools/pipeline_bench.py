@@ -44,9 +44,10 @@ def main() -> int:
     # MEMORY_AND_DISK: at 500k+ docs the text column can outgrow the
     # storage fraction; spilling a stage input to disk is cheaper than
     # recomputing the whole prefix into every downstream stage.
-    # Stages take a THUNK, not a frame: connected_components runs its
-    # iterations EAGERLY at call time (localCheckpoint per round), so
-    # timing must bracket construction, not just the final count.
+    # Stages take a THUNK, not a frame: connected_components does its
+    # work EAGERLY at call time (it checkpoints the pairs, then solves
+    # a small graph on the driver or runs its Spark rounds), so timing
+    # must bracket construction, not just the final count.
     def stage(name: str, build, keep: bool = True):
         t0 = time.perf_counter()
         df = build()
