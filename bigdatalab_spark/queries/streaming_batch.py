@@ -530,6 +530,7 @@ def statestore_user_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from bigdatalab_spark.streaming.jobs import (
+        run_stream_to_memory,
         stream_events,
         unique_sink_name,
     )
@@ -540,30 +541,16 @@ def statestore_user_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     # user_id is a data-sized keyspace: size the drain's state
     # partitions from the input bytes (state_partitions_for_bytes) —
     # the state READER below scans one task per state partition either
-    # way, so inspection parallelism follows the same derivation
-    from bigdatalab_spark.streaming.jobs import state_partitions_for_bytes
-
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions", "200")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        str(
-            state_partitions_for_bytes(
-                spark, os.path.getsize(f"{sf_dir}/events.parquet")
-            )
-        ),
+    # way, so inspection parallelism follows the same derivation. The
+    # drain returns only once the stream has processed everything (a
+    # failed query raises), so the state read never sees partial state
+    run_stream_to_memory(
+        counts,
+        unique_sink_name("statestore_counts"),
+        checkpoint_dir=f"{scratch}/ckpt",
+        output_mode="update",
+        state_input_bytes=os.path.getsize(f"{sf_dir}/events.parquet"),
     )
-    try:
-        q = (
-            counts.writeStream.format("memory")
-            .queryName(unique_sink_name("statestore_counts"))
-            .outputMode("update")
-            .option("checkpointLocation", f"{scratch}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(600)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
     return (
         grouped_count_state(spark, f"{scratch}/ckpt")
         .select("user_id", F.col("cnt").cast("long").alias("cnt"))

@@ -97,6 +97,7 @@ import os
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from bigdatalab_spark.plans.compile import flat_plan_scope
 from bigdatalab_spark.sources.locks import (
     ConcurrentWriteError,
     dataset_write_lock,
@@ -207,59 +208,6 @@ def _job_label(spark, desc: str):
         yield
     finally:
         sc.setJobDescription(old)
-
-
-@contextlib.contextmanager
-def _delta_plan_scope(spark):
-    """Compile a DELETE/UPDATE plan's PERSISTED frame without AQE.
-    Spark compiles a cached plan's physical plan at ``persist()`` call
-    time (CacheManager.cacheQuery), so the session's AQE flag AT THAT
-    MOMENT decides how the cache later materializes: with AQE captured,
-    every Exchange inside the cached plan becomes its own stage-job on
-    first use. The frame persisted here is delta-sized by the DML
-    contract (the touched files' rows), so AQE could only add fixed
-    scheduling rounds to every commit. Actions and the commit writes
-    keep their own AQE settings (the labeled metadata actions run
-    AQE-off regardless; the writes compile AQE-on after this scope
-    exits, so output coalescing is unchanged)."""
-    old = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", old)
-
-
-@contextlib.contextmanager
-def _metadata_action(spark, desc: str):
-    """Label + run a METADATA-SIZED single-row action (a global
-    aggregation to one row) with AQE off for just this action. A
-    to-one-row aggregation has nothing AQE can re-plan at ANY input
-    size — the final stage is a single partition by construction and
-    there is no keyed reduce side to coalesce or skew-split — while
-    AQE's stage-by-stage materialization turns the short chain into
-    one Spark job per exchange (measured 3 jobs for the attribution
-    agg, 1 without). Executing it as ONE job removes fixed scheduling
-    rounds from every DML commit; results are identical (AQE is a
-    physical-plan feature). Callers fetch their one-row result with
-    ``collect()[0]``, not ``first()``: take(1) wraps the aggregation
-    in a separate Limit plan that is re-planned and codegen-compiled
-    on every commit for no benefit when the result is a single row by
-    construction. Session-global setting: another thread
-    planning a query in the same session during this action would
-    also plan without AQE — a perf-only, correctness-free blip; DML
-    runs under the table write lock, so the window is one metadata
-    aggregation wide."""
-    sc = spark.sparkContext
-    old_desc = sc.getLocalProperty("spark.job.description")
-    old_aqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    sc.setJobDescription(desc)
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", old_aqe)
-        sc.setJobDescription(old_desc)
 
 
 def _walk_data_files(vdir: str) -> list[str]:
@@ -507,16 +455,20 @@ class ManagedTable:
     (possibly with NULL stats for files that predate a column — such
     files are always-candidates, never dropped).
 
-    ``concurrency`` picks the writer protocol:
+    Every mutation runs ONE commit protocol: compute against a pinned
+    base snapshot, write the delta to a staging directory, then in a
+    commit section re-read the pointer, validate against any commit
+    that landed since the base, rename the staging directory into the
+    next version and land it. ``concurrency`` decides only how long
+    the writer lock is held:
 
-    - ``"exclusive"`` (default): every mutation holds the table's
-      writer lock across its whole read-modify-write — one writer at a
-      time, concurrent writers fail fast. Simple, serializable.
-    - ``"optimistic"``: mutations COMPUTE against a pinned base
-      snapshot with NO lock held (the expensive Spark work runs
-      concurrently), then take a short commit critical section that
-      validates the transaction against every commit that landed since
-      the base and REBASES it onto the current snapshot. Validation is
+    - ``"exclusive"`` (default): across the whole read-modify-write —
+      one writer at a time, concurrent writers fail fast, and the base
+      can never move. Simple, serializable.
+    - ``"optimistic"``: only for the short commit section (acquisition
+      waits up to ``commit_timeout``), so the expensive Spark work of
+      concurrent writers overlaps. A commit whose base moved is
+      validated and REBASED onto the current snapshot. Validation is
       file-level, derived entirely from the committed manifests (each
       intervening commit's removed set = parent manifest − child
       manifest, no extra txn log): a winner that removed files this
@@ -721,15 +673,16 @@ class ManagedTable:
             for k, v in (writer_options or {}).items():
                 writer = writer.option(k, v)
             writer.parquet(vdir)
-            files = _walk_data_files(vdir)
-            self._write_index(vdir, new_files=files)
-            _write_manifest(vdir, _sized(vdir, files))
-            self._write_schema(vdir, df.schema)
-            self._write_partition_cols(vdir, tuple(partition_cols))
-            if stream_batch_id is not None:
-                self._write_stream_batch(vdir, stream_batch_id)
-            self._commit(version, vdir, expected=current, op="write")
-            return version
+            return self._land(
+                version,
+                vdir,
+                "write",
+                current,
+                new_files=_walk_data_files(vdir),
+                schema=df.schema,
+                pcols=tuple(partition_cols),
+                stream_batch_id=stream_batch_id,
+            )
 
     def append(self, df: DataFrame) -> int:
         """Append-as-new-version: the previous snapshot's data files are
@@ -739,58 +692,83 @@ class ManagedTable:
         relative, and a linked file's stats are its stats). Cost is
         proportional to the APPENDED data, not the table.
 
+        The new files are written to a staging directory; the commit
+        section then carries whatever the CURRENT snapshot holds
+        (appends read no rows, so they rebase onto any snapshot with
+        the same partition layout). Two concurrent optimistic appends
+        both land, as consecutive versions.
+
         SCHEMA EVOLUTION: ``df`` may add brand-new columns (the stored
         schema grows; linked pre-evolution files read back with NULLs
         for them, and an indexed evolved column gives them NULL stats =
         always-candidates). Dropping or re-typing existing columns is
         refused loudly — see :meth:`_evolve_schema`."""
-        if self.concurrency == "optimistic":
-            return self._append_optimistic(df)
-        with dataset_write_lock(self.path, "managed_append"):
-            current = latest_version(self.path)
-            if current is None:
-                # first append = first snapshot; same commit protocol
-                version, vdir = self._allocate()
-                df.write.mode("errorifexists").parquet(vdir)
-                files = _walk_data_files(vdir)
-                self._write_index(vdir, new_files=files)
-                _write_manifest(vdir, _sized(vdir, files))
-                self._write_schema(vdir, df.schema)
-                self._commit(version, vdir, expected=current, op="write")
-                return version
-            prev = _version_dir(self.path, current)
-            prev_files = _data_files(prev)
-            new_schema = self._evolve_schema(current, df)
-            version, vdir = self._allocate()
+        import shutil
+
+        with self._op_lock("managed_append"):
+            if latest_version(self.path) is None:
+                # first append = first snapshot. In optimistic mode a
+                # concurrent first append QUEUES on the retrying
+                # section instead of failing fast, then either
+                # bootstraps (it won) or falls through to the staged
+                # append below (the winner's snapshot is its base)
+                with self._commit_section("managed_append"):
+                    if latest_version(self.path) is None:
+                        version, vdir = self._allocate()
+                        df.write.mode("errorifexists").parquet(vdir)
+                        return self._land(
+                            version,
+                            vdir,
+                            "write",
+                            None,
+                            new_files=_walk_data_files(vdir),
+                            schema=df.schema,
+                        )
+            base = latest_version(self.path)
+            self._guard_granularity_upgrade(base, "append")
             # a partitioned table's delta lands under the same
             # col=val/ layout (partition columns are table metadata,
             # recorded at write() time)
-            pcols = self.partition_cols_of(current)
-            writer = df.write.mode("errorifexists")
-            if pcols:
-                writer = writer.partitionBy(*pcols)
-            writer.parquet(vdir)
-            new_files = set(_walk_data_files(vdir))
-            clash = new_files & set(prev_files)
-            if clash:  # astronomically unlikely (UUIDs)
-                raise ConcurrentWriteError(
-                    f"append file-name collision on {sorted(clash)[0]}"
-                )
-            carried = self._carry(current, None, vdir)
-            self._write_index(
-                vdir,
-                new_files=sorted(new_files),
-                reuse_from=os.path.join(prev, _INDEX_DIR),
-            )
-            # manifest composes from the PARENT's rows + the delta —
-            # no walk of the snapshot, no re-stat of carried files
-            _write_manifest(
-                vdir, carried + _sized(vdir, sorted(new_files))
-            )
-            self._write_schema(vdir, new_schema)
-            self._write_partition_cols(vdir, pcols)
-            self._commit(version, vdir, expected=current, op="append")
-            return version
+            pcols = self.partition_cols_of(base)
+            work = self._allocate_staging()
+            try:
+                writer = df.write.mode("append")
+                if pcols:
+                    writer = writer.partitionBy(*pcols)
+                writer.parquet(work)
+                new_files = _walk_data_files(work)
+                with self._commit_section("managed_append_commit"):
+                    current = latest_version(self.path)
+                    if self.partition_cols_of(current) != pcols:
+                        raise CommitConflictError(
+                            f"append on {self.path}: the table's "
+                            f"partition layout changed from {pcols} to "
+                            f"{self.partition_cols_of(current)} while the "
+                            "delta was being written — recompute against "
+                            "the current version"
+                        )
+                    new_schema = self._evolve_schema(current, df)
+                    clash = set(new_files) & set(
+                        _data_files(_version_dir(self.path, current))
+                    )
+                    if clash:  # astronomically unlikely (UUIDs)
+                        raise ConcurrentWriteError(
+                            f"append file-name collision on {sorted(clash)[0]}"
+                        )
+                    version, work = self._promote(work)
+                    return self._land(
+                        version,
+                        work,
+                        "append",
+                        current,
+                        new_files=new_files,
+                        schema=new_schema,
+                        pcols=pcols,
+                        carry=True,
+                    )
+            except BaseException:
+                shutil.rmtree(work, ignore_errors=True)
+                raise
 
     def compact(
         self,
@@ -815,11 +793,7 @@ class ManagedTable:
         INSIDE kept files; pass ``writer_options`` (e.g.
         ``parquet.block.size``) to control row-group granularity."""
         with dataset_write_lock(self.path, "managed_compact"):
-            current = latest_version(self.path)
-            if current is None:
-                raise FileNotFoundError(
-                    f"no committed versions under {self.path}"
-                )
+            current = self._resolve(None)
             prev = _version_dir(self.path, current)
             df = self.read(current)
             n_rows = df.count()
@@ -862,13 +836,15 @@ class ManagedTable:
             for k, v in (writer_options or {}).items():
                 writer = writer.option(k, v)
             writer.parquet(vdir)
-            files = _walk_data_files(vdir)
-            self._write_index(vdir, new_files=files)
-            _write_manifest(vdir, _sized(vdir, files))
-            self._write_schema(vdir, df.schema)
-            self._write_partition_cols(vdir, pcols)
-            self._commit(version, vdir, expected=current, op="compact")
-            return version
+            return self._land(
+                version,
+                vdir,
+                "compact",
+                current,
+                new_files=_walk_data_files(vdir),
+                schema=df.schema,
+                pcols=pcols,
+            )
 
     # ---- row-level DML (copy-on-write) -----------------------------------
 
@@ -970,19 +946,13 @@ class ManagedTable:
         before anything is written, instead of merging slowly. Split
         such a source into several merges."""
         keys = (keys,) if isinstance(keys, str) else tuple(keys)
-        if self.concurrency == "optimistic":
-            # compute against a pinned base with NO lock held; the
-            # short commit section validates + rebases (class docstring)
-            current = latest_version(self.path)
-            if current is None:
-                raise FileNotFoundError(
-                    f"no committed versions under {self.path}"
-                )
+        with self._op_lock("managed_merge"):
+            current = self._resolve(None)
             plan = self._merge_plan(current, source, keys, when_matched)
             if plan is None:
                 return current
             scan_files, touched, new_df, cdf, bounds = plan
-            return self._commit_cow_optimistic(
+            return self._commit_cow(
                 current,
                 scan_files,
                 touched,
@@ -991,27 +961,6 @@ class ManagedTable:
                 "merge",
                 stream_batch_id=stream_batch_id,
                 merge_bounds=bounds,
-            )
-        with dataset_write_lock(self.path, "managed_merge"):
-            current = latest_version(self.path)
-            if current is None:
-                raise FileNotFoundError(
-                    f"no committed versions under {self.path}"
-                )
-            plan = self._merge_plan(current, source, keys, when_matched)
-            if plan is None:
-                return current
-            _scan_files, touched, new_df, cdf, _bounds = plan
-            prev = _version_dir(self.path, current)
-            return self._commit_cow(
-                current,
-                prev,
-                _data_files(prev),
-                touched,
-                new_df,
-                cdf,
-                "merge",
-                stream_batch_id=stream_batch_id,
             )
 
     def _merge_plan(
@@ -1196,20 +1145,14 @@ class ManagedTable:
         (optionally index-pruned), rewrite only touched files, link the
         rest, record the change feed, commit."""
         cond = F.expr(condition) if isinstance(condition, str) else condition
-        if self.concurrency == "optimistic":
-            # compute against a pinned base with NO lock held; the
-            # short commit section validates + rebases (class docstring)
-            current = latest_version(self.path)
-            if current is None:
-                raise FileNotFoundError(
-                    f"no committed versions under {self.path}"
-                )
+        with self._op_lock(f"managed_{op}"):
+            current = self._resolve(None)
             plan = self._dml_plan(current, op, cond, assignments, prune)
             if plan is None:
-                return current
+                return current  # no matches: the table is unchanged
             scan_files, touched, new_df, cdf, cached = plan
             try:
-                return self._commit_cow_optimistic(
+                return self._commit_cow(
                     current,
                     scan_files,
                     touched,
@@ -1220,25 +1163,6 @@ class ManagedTable:
                     # files against the predicate's indexed range (None =
                     # unbounded predicate: any added file conflicts)
                     pred_bounds=tuple(prune[:3]) if prune else None,
-                )
-            finally:
-                for c in cached:
-                    c.unpersist()
-        with dataset_write_lock(self.path, f"managed_{op}"):
-            current = latest_version(self.path)
-            if current is None:
-                raise FileNotFoundError(
-                    f"no committed versions under {self.path}"
-                )
-            plan = self._dml_plan(current, op, cond, assignments, prune)
-            if plan is None:
-                return current  # no matches: the table is unchanged
-            _scan_files, touched, new_df, cdf, cached = plan
-            prev = _version_dir(self.path, current)
-            all_files = _data_files(prev)
-            try:
-                return self._commit_cow(
-                    current, prev, all_files, touched, new_df, cdf, op
                 )
             finally:
                 for c in cached:
@@ -1256,8 +1180,9 @@ class ManagedTable:
         snapshot (no commit work): attribute matches to files
         (index-pruned when the predicate bounds an indexed column) and
         build the rewrite + change-feed plans. Returns
-        ``(scan_files, touched, new_df, cdf)`` or None when nothing
-        matches."""
+        ``(scan_files, touched, new_df, cdf, cached)`` — ``cached``
+        lists the persisted frames the caller unpersists once the
+        commit has landed — or None when nothing matches."""
         prev = _version_dir(self.path, current)
         all_files = _data_files(prev)
         cur_schema = self.stored_schema(current)
@@ -1272,7 +1197,13 @@ class ManagedTable:
         # final single-partition merge) instead of the extra exchange
         # distinct().collect() paid. collect_set drops NULLs, so the
         # path-normalization guard compares row counts to stay loud.
-        with _metadata_action(self.spark, f"managed {op}: attribution"):
+        # A to-one-row aggregation has nothing AQE could re-plan, and
+        # AQE would run its exchanges as separate jobs (3 against 1):
+        # compile it flat. collect()[0], not first(): take(1) wraps it
+        # in a Limit plan that is re-planned on every commit.
+        with _job_label(
+            self.spark, f"managed {op}: attribution"
+        ), flat_plan_scope(self.spark):
             att = (
                 self._with_file(current, scan_files, cur_schema)
                 .filter(hit)
@@ -1307,7 +1238,7 @@ class ManagedTable:
         # (plus the clustered write's range-sampling pass) — persist so
         # they are read from storage once, not once per action
         # (unpersisted by the caller once the commit has landed)
-        with _delta_plan_scope(self.spark):
+        with flat_plan_scope(self.spark):
             touched_df = self._read_files(
                 current, touched, cur_schema
             ).persist()
@@ -1348,7 +1279,9 @@ class ManagedTable:
         # two OVERLAPPED writes both race to compute them: persist() is
         # lazy and RDD cache fills are unsynchronized, so two concurrent
         # first consumers would each read the touched files
-        with _metadata_action(self.spark, f"managed {op}: plan cache fill"):
+        with _job_label(
+            self.spark, f"managed {op}: plan cache fill"
+        ), flat_plan_scope(self.spark):
             touched_df.count()
         return scan_files, touched, new_df, cdf, [touched_df]
 
@@ -1404,109 +1337,186 @@ class ManagedTable:
 
     def _commit_cow(
         self,
-        current: int,
-        prev: str,
-        all_files: list[str],
+        base: int,
+        read_set: list[str],
         touched: list[str],
         new_df: DataFrame,
         cdf: DataFrame,
         op: str,
         stream_batch_id: int | None = None,
+        merge_bounds: tuple | None = None,
+        pred_bounds: tuple | None = None,
     ) -> int:
-        """Land a copy-on-write version: write the rewritten rows,
-        hard-link every untouched file, reuse the linked files' index
-        rows + footer-probe only the new files, write the change feed
-        (and the stream-batch marker, if any), commit (marker records
-        ``op``)."""
-        version, vdir = self._allocate()
-        # optimized write: the rewrite is delta-sized (touched files'
-        # rows + the merge batch), but it arrives on shuffle-partition
-        # parallelism — written raw, every DML would scatter ~32 small
-        # files and destroy the rewritten rows' clustering, bloating
-        # both the file count and the index's selectivity (the soak
-        # bench caught exactly this drift). Re-range on the index
-        # columns into ~one file per touched input file instead; the
-        # small extra shuffle is delta-sized by construction.
-        n_out = max(1, len(touched) + (1 if op == "merge" else 0))
-        new_df = self._cluster_rewrite(new_df, n_out)
-        # claim the version directory ATOMICALLY before the two
-        # overlapped writes start: the change-feed thread creates
-        # vdir/_cdf (and hence vdir) concurrently with the rewrite, so
-        # the rewrite's own errorifexists check would race against its
-        # sibling. An exclusive mkdir is the same collision guard the
-        # errorifexists mode provided (two committers racing to the
-        # same version number: exactly one wins), just earlier — and
-        # both writes then append into the directory this commit owns.
+        """Land a copy-on-write version computed against ``base``. The
+        delta (the rewritten rows + the change feed) is written to a
+        staging directory — in optimistic mode with no lock held, so
+        the expensive Spark work runs concurrently with other writers.
+        The commit section then re-reads the pointer and, if it moved
+        past ``base``, validates against every commit since
+        (:meth:`_validate_rebase`); it renames the staging directory
+        into the next version, REBASES by carrying the untouched files
+        of the CURRENT snapshot (which may include files concurrent
+        commits added) and lands the version (:meth:`_land`, marker
+        records ``op``). In exclusive mode the operation lock is held
+        throughout, so the pointer cannot move. On conflict or error
+        the staging (or version) directory is removed — nothing of the
+        transaction ever becomes visible."""
+        import shutil
+
+        self._guard_granularity_upgrade(base, op)
+        work = self._allocate_staging()
         try:
-            os.makedirs(vdir, exist_ok=False)
-        except FileExistsError:
-            raise ConcurrentWriteError(
-                f"{op} lost the race for version directory {vdir}"
-            ) from None
-        writer = new_df.write.mode("append")
-        pcols = self.partition_cols_of(current)
-        if pcols:
-            # partitioned table: the rewrite lands under the same
-            # col=val/ directory layout, so partition pruning keeps
-            # composing with the file-skipping index
-            writer = writer.partitionBy(*pcols)
-        def _do_rewrite():
-            with _job_label(self.spark, f"managed {op}: rewrite write"):
-                writer.parquet(vdir)
+            # optimized write: the rewrite is delta-sized (touched
+            # files' rows + the merge batch), but it arrives on
+            # shuffle-partition parallelism — written raw, every DML
+            # would scatter ~32 small files and destroy the rewritten
+            # rows' clustering, bloating both the file count and the
+            # index's selectivity (the soak bench caught exactly this
+            # drift). Re-range on the index columns into ~one file per
+            # touched input file instead; the small extra shuffle is
+            # delta-sized by construction.
+            n_out = max(1, len(touched) + (1 if op == "merge" else 0))
+            new_df = self._cluster_rewrite(new_df, n_out)
+            pcols = self.partition_cols_of(base)
+            # append mode: the staging dir exists (and is ours alone);
+            # the change feed is written UNSTAMPED — the commit version
+            # is unknown until the commit section allocates it, and
+            # readers stamp it from the directory
+            writer = new_df.write.mode("append")
+            if pcols:
+                # partitioned table: the rewrite lands under the same
+                # col=val/ directory layout, so partition pruning keeps
+                # composing with the file-skipping index
+                writer = writer.partitionBy(*pcols)
 
-        def _do_cdf():
-            with _job_label(
-                self.spark, f"managed {op}: change-feed write"
-            ):
-                (
-                    cdf.withColumn(_COMMIT_VERSION, F.lit(version))
-                    .write.mode("append")
-                    .parquet(os.path.join(vdir, _CDF_DIR))
+            def _do_rewrite():
+                with _job_label(
+                    self.spark, f"managed {op}: rewrite write"
+                ):
+                    writer.parquet(work)
+
+            def _do_cdf():
+                with _job_label(
+                    self.spark, f"managed {op}: change-feed write"
+                ):
+                    cdf.write.mode("append").parquet(
+                        os.path.join(work, _CDF_DIR)
+                    )
+
+            self._overlap_writes(_do_rewrite, _do_cdf)
+            written = _walk_data_files(work)
+            with self._commit_section(f"managed_{op}_commit"):
+                current = latest_version(self.path)
+                if current is None:
+                    raise CommitConflictError(
+                        f"{op} on {self.path}: the table's versions "
+                        "disappeared mid-transaction"
+                    )
+                if current != base:
+                    self._validate_rebase(
+                        base, current, read_set, op, merge_bounds,
+                        pred_bounds,
+                    )
+                not_ours = set(touched)
+                link = [
+                    rel
+                    for rel in _data_files(_version_dir(self.path, current))
+                    if rel not in not_ours
+                ]
+                clash = set(written) & set(link)
+                if clash:  # astronomically unlikely (UUIDs)
+                    raise ConcurrentWriteError(
+                        f"{op} file-name collision on {sorted(clash)[0]}"
+                    )
+                version, work = self._promote(work)
+                schema = self.stored_schema(current)
+                if schema is None:
+                    schema = new_df.schema
+                # under link_mode="reference" the carry writes NO
+                # per-file syscalls — the critical section's cost is
+                # O(delta), not O(live files), however large the snapshot
+                return self._land(
+                    version,
+                    work,
+                    op,
+                    current,
+                    new_files=written,
+                    schema=schema,
+                    pcols=pcols,
+                    carry=True,
+                    keep=link,
+                    stream_batch_id=stream_batch_id,
                 )
+        except BaseException:
+            shutil.rmtree(work, ignore_errors=True)
+            raise
 
-        self._overlap_writes(_do_rewrite, _do_cdf)
-        written = set(_walk_data_files(vdir))
-        link = [rel for rel in all_files if rel not in touched]
-        clash = written & set(link)
-        if clash:  # astronomically unlikely (UUIDs)
-            raise ConcurrentWriteError(
-                f"{op} file-name collision on {sorted(clash)[0]}"
-            )
-        carried = self._carry(current, link, vdir)
-        self._write_index(
-            vdir,
-            new_files=sorted(written),
-            reuse_from=os.path.join(prev, _INDEX_DIR),
-            reuse_files=set(link),
-        )
-        # manifest = parent rows minus the rewritten files + the delta;
-        # planning the NEXT commit then never walks or re-stats the
-        # carried files (cost stays proportional to this commit's delta)
-        _write_manifest(
-            vdir, carried + _sized(vdir, sorted(written))
-        )
-        schema = self.stored_schema(current)
-        if schema is None:
-            schema = new_df.schema
+    def _land(
+        self,
+        version: int,
+        vdir: str,
+        op: str,
+        parent: int | None,
+        new_files: list[str],
+        schema,
+        pcols: tuple[str, ...] = (),
+        carry: bool = False,
+        keep: list[str] | None = None,
+        stream_batch_id: int | None = None,
+    ) -> int:
+        """Land ``version`` from its filled directory ``vdir`` in the
+        one order every commit uses: carry the parent's untouched files
+        (``carry=True``: all of them, or only ``keep``), then the index
+        (``new_files`` footer-probed, the carried files' rows reused
+        from the parent's index), the manifest (carried rows + the
+        delta — no walk of the snapshot, no re-stat of carried files),
+        schema, partition columns and stream batch, and last the marker
+        and pointer (:meth:`_commit`, a CAS against ``parent``)."""
+        carried: list[dict] = []
+        reuse = {}
+        if carry:
+            carried = self._carry(parent, keep, vdir)
+            reuse = {
+                "reuse_from": os.path.join(
+                    _version_dir(self.path, parent), _INDEX_DIR
+                ),
+                "reuse_files": None if keep is None else set(keep),
+            }
+        self._write_index(vdir, new_files=new_files, **reuse)
+        _write_manifest(vdir, carried + _sized(vdir, new_files))
         self._write_schema(vdir, schema)
         self._write_partition_cols(vdir, pcols)
         if stream_batch_id is not None:
             self._write_stream_batch(vdir, stream_batch_id)
-        self._commit(version, vdir, expected=current, op=op)
+        self._commit(version, vdir, expected=parent, op=op)
         return version
+
+    def _op_lock(self, what: str):
+        """The writer lock for a whole mutation: in exclusive mode the
+        read-modify-write runs under it (fail fast when another writer
+        holds it); in optimistic mode nothing is held here and the
+        commit takes the short :meth:`_commit_section` instead."""
+        if self.concurrency == "exclusive":
+            return dataset_write_lock(self.path, what)
+        return contextlib.nullcontext()
 
     @contextlib.contextmanager
     def _commit_section(self, what: str, timeout: float | None = None):
         """The optimistic protocol's SHORT commit critical section:
-        unlike the exclusive paths (which fail fast — their planned
-        input is stale by the time a held lock frees), an optimistic
-        commit revalidates and rebases inside the section, so waiting
-        is correct: retry acquisition with a small sleep until
-        ``timeout``. Only ACQUISITION is retried — conflicts raised
-        inside the section (CommitConflictError, CAS) propagate."""
+        unlike the exclusive operation lock (which fails fast — its
+        planned input is stale by the time a held lock frees), an
+        optimistic commit revalidates and rebases inside the section,
+        so waiting is correct: retry acquisition with a small sleep
+        until ``timeout``. Only ACQUISITION is retried — conflicts
+        raised inside the section (CommitConflictError, CAS)
+        propagate. In exclusive mode this is a no-op: the operation
+        lock (:meth:`_op_lock`) is already held."""
         import sys
         import time
 
+        if self.concurrency == "exclusive":
+            yield
+            return
         if timeout is None:
             timeout = self.commit_timeout
         deadline = time.monotonic() + timeout
@@ -1579,7 +1589,11 @@ class ManagedTable:
         lock held; an exclusive-mode ``compact()`` establishes the
         finer granularity once, after which optimistic commits reuse
         it incrementally."""
-        if not (self.rowgroup_index and self.index_cols) or base is None:
+        if (
+            self.concurrency != "optimistic"
+            or not (self.rowgroup_index and self.index_cols)
+            or base is None
+        ):
             return
         d = os.path.join(_version_dir(self.path, base), _INDEX_RG_DIR)
         if not os.path.isdir(d):
@@ -1592,11 +1606,11 @@ class ManagedTable:
             )
 
     def _allocate_staging(self) -> str:
-        """A private SCRATCH directory for an optimistic transaction's
-        unlocked writes (``_txn_<uuid>`` — invisible to readers and to
-        version numbering). The FINAL version number is allocated
-        inside the commit section and the staging dir renamed into
-        place there: numbering at reservation time would let a
+        """A private SCRATCH directory for a transaction's staged
+        writes (``_txn_<uuid>`` — invisible to readers and to version
+        numbering; in optimistic mode they run with no lock held). The
+        FINAL version number is allocated inside the commit section
+        and the staging dir renamed into place there: numbering at reservation time would let a
         later-committing transaction carry a SMALLER number, moving
         the pointer backwards and breaking every "versions <= N are
         delivered" feed offset. A ``_RESERVED`` stamp (pid + host,
@@ -1629,6 +1643,16 @@ class ManagedTable:
         sdir = os.path.join(self.path, f"_txn_{token}")
         os.rename(scratch, sdir)
         return sdir
+
+    def _promote(self, work: str) -> tuple[int, str]:
+        """Rename a staged transaction directory into the next version
+        directory. Called inside the commit section: the number is
+        allocated UNDER the writer lock, so commit order and version
+        order coincide and the pointer only advances."""
+        version, vdir = self._allocate()
+        os.remove(os.path.join(work, _RESERVED))
+        os.rename(work, vdir)
+        return version, vdir
 
     def _manifest_diff(
         self, parent: int, child: int
@@ -1730,189 +1754,6 @@ class ManagedTable:
                         "applied to those rows; recompute against the "
                         "current version"
                     )
-
-    def _commit_cow_optimistic(
-        self,
-        base: int,
-        read_set: list[str],
-        touched: list[str],
-        new_df: DataFrame,
-        cdf: DataFrame,
-        op: str,
-        stream_batch_id: int | None = None,
-        merge_bounds: tuple | None = None,
-        pred_bounds: tuple | None = None,
-    ) -> int:
-        """Optimistic tail of the copy-on-write commit: the delta (the
-        rewritten rows + the change feed) is WRITTEN with no lock held
-        — the expensive Spark work runs concurrently with other
-        writers — then a short critical section validates against
-        every commit since ``base`` (:meth:`_validate_rebase`),
-        REBASES by hard-linking the untouched files of the CURRENT
-        snapshot (which may include files concurrent commits added),
-        and lands index/manifest/schema/marker. On conflict or error
-        the reserved version dir is removed — nothing of the
-        transaction ever becomes visible."""
-        import shutil
-
-        self._guard_granularity_upgrade(base, op)
-        work = self._allocate_staging()
-        try:
-            # same optimized-write clustering as the exclusive path
-            n_out = max(1, len(touched) + (1 if op == "merge" else 0))
-            new_df = self._cluster_rewrite(new_df, n_out)
-            pcols = self.partition_cols_of(base)
-            # append mode: the staging dir exists (and is ours alone);
-            # the change feed is written UNSTAMPED — the commit version
-            # is unknown until the commit section allocates it, and
-            # changes() stamps it from the directory at read time
-            writer = new_df.write.mode("append")
-            if pcols:
-                writer = writer.partitionBy(*pcols)
-
-            def _do_rewrite():
-                with _job_label(
-                    self.spark, f"managed {op}: rewrite write"
-                ):
-                    writer.parquet(work)
-
-            def _do_cdf():
-                with _job_label(
-                    self.spark, f"managed {op}: change-feed write"
-                ):
-                    cdf.write.mode("append").parquet(
-                        os.path.join(work, _CDF_DIR)
-                    )
-
-            self._overlap_writes(_do_rewrite, _do_cdf)
-            written = set(_walk_data_files(work))
-            with self._commit_section(f"managed_{op}_commit"):
-                current = latest_version(self.path)
-                if current is None:
-                    raise CommitConflictError(
-                        f"optimistic {op} on {self.path}: the table's "
-                        "versions disappeared mid-transaction"
-                    )
-                if current != base:
-                    self._validate_rebase(
-                        base, current, read_set, op, merge_bounds,
-                        pred_bounds,
-                    )
-                prev = _version_dir(self.path, current)
-                cur_files = _data_files(prev)
-                not_ours = set(touched)
-                link = [rel for rel in cur_files if rel not in not_ours]
-                clash = written & set(link)
-                if clash:  # astronomically unlikely
-                    raise ConcurrentWriteError(
-                        f"{op} file-name collision on {sorted(clash)[0]}"
-                    )
-                # version number allocated UNDER the lock: commit order
-                # and version order coincide, the pointer only advances
-                version, vdir = self._allocate()
-                os.remove(os.path.join(work, _RESERVED))
-                os.rename(work, vdir)
-                work = vdir
-                # under link_mode="reference" this writes NO per-file
-                # syscalls — the critical section's cost is O(delta),
-                # not O(live files), no matter how large the snapshot
-                carried = self._carry(current, link, vdir)
-                self._write_index(
-                    vdir,
-                    new_files=sorted(written),
-                    reuse_from=os.path.join(prev, _INDEX_DIR),
-                    reuse_files=set(link),
-                )
-                _write_manifest(
-                    vdir, carried + _sized(vdir, sorted(written))
-                )
-                schema = self.stored_schema(current)
-                if schema is None:
-                    schema = new_df.schema
-                self._write_schema(vdir, schema)
-                self._write_partition_cols(vdir, pcols)
-                if stream_batch_id is not None:
-                    self._write_stream_batch(vdir, stream_batch_id)
-                self._commit(version, vdir, expected=current, op=op)
-                return version
-        except BaseException:
-            shutil.rmtree(work, ignore_errors=True)
-            raise
-
-    def _append_optimistic(self, df: DataFrame) -> int:
-        """Append under the optimistic protocol: the new files are
-        written with no lock held; the short commit section links
-        whatever the CURRENT snapshot holds (appends read no rows, so
-        they rebase onto any flat snapshot) and commits. Two
-        concurrent appends both land, as consecutive versions."""
-        import shutil
-
-        if latest_version(self.path) is None:
-            # initial snapshot: acquire through the optimistic
-            # protocol's retrying section — a concurrent first-append
-            # QUEUES briefly instead of failing fast (the optimistic
-            # contract), then either bootstraps (it won) or falls
-            # through to the normal staging append (the winner's
-            # snapshot is its base)
-            with self._commit_section("managed_append"):
-                if latest_version(self.path) is None:
-                    version, vdir = self._allocate()
-                    df.write.mode("errorifexists").parquet(vdir)
-                    files = _walk_data_files(vdir)
-                    self._write_index(vdir, new_files=files)
-                    _write_manifest(vdir, _sized(vdir, files))
-                    self._write_schema(vdir, df.schema)
-                    self._commit(version, vdir, expected=None, op="write")
-                    return version
-        base = latest_version(self.path)
-        self._guard_granularity_upgrade(base, "append")
-        pcols = self.partition_cols_of(base)
-        work = self._allocate_staging()
-        try:
-            writer = df.write.mode("append")
-            if pcols:
-                writer = writer.partitionBy(*pcols)
-            writer.parquet(work)
-            new_files = set(_walk_data_files(work))
-            with self._commit_section("managed_append_commit"):
-                current = latest_version(self.path)
-                prev = _version_dir(self.path, current)
-                prev_files = _data_files(prev)
-                if self.partition_cols_of(current) != pcols:
-                    raise CommitConflictError(
-                        f"optimistic append on {self.path}: the table's "
-                        f"partition layout changed from {pcols} to "
-                        f"{self.partition_cols_of(current)} while the "
-                        "delta was being written — recompute against "
-                        "the current version"
-                    )
-                new_schema = self._evolve_schema(current, df)
-                if new_files & set(prev_files):  # astronomically unlikely
-                    raise ConcurrentWriteError(
-                        "append file-name collision on "
-                        f"{sorted(new_files & set(prev_files))[0]}"
-                    )
-                version, vdir = self._allocate()
-                os.remove(os.path.join(work, _RESERVED))
-                os.rename(work, vdir)
-                work = vdir
-                # reference mode: zero per-file syscalls in the section
-                carried = self._carry(current, None, vdir)
-                self._write_index(
-                    vdir,
-                    new_files=sorted(new_files),
-                    reuse_from=os.path.join(prev, _INDEX_DIR),
-                )
-                _write_manifest(
-                    vdir, carried + _sized(vdir, sorted(new_files))
-                )
-                self._write_schema(vdir, new_schema)
-                self._write_partition_cols(vdir, pcols)
-                self._commit(version, vdir, expected=current, op="append")
-                return version
-        except BaseException:
-            shutil.rmtree(work, ignore_errors=True)
-            raise
 
     def _evolve_schema(self, current: int, df: DataFrame):
         """Schema evolution contract for append: every existing column
@@ -2219,9 +2060,9 @@ class ManagedTable:
         cdf_dir = os.path.join(vdir, _CDF_DIR)
         if os.path.isdir(cdf_dir):
             # the commit version is stamped from the DIRECTORY, the one
-            # authority: optimistic commits write their feed before
-            # their number exists (exclusive commits store the same
-            # value; withColumn replaces it identically)
+            # authority: every commit writes its feed to a staging
+            # directory before its number exists, so the stored feed
+            # carries no _commit_version column
             return self.spark.read.parquet(cdf_dir).withColumn(
                 _COMMIT_VERSION, F.lit(v)
             )

@@ -359,10 +359,10 @@ def _read_partition(part: _ChangePartition, arrow_schema) -> Iterator:
                     )
             elif field.name == "_commit_version":
                 # always stamped from the partition (the version
-                # DIRECTORY is the authority): optimistic commits write
-                # their _cdf before the version number exists, so the
-                # stored column may be absent — and when present it
-                # carries this value
+                # DIRECTORY is the authority): commits write their _cdf
+                # before the version number exists, so the stored
+                # column is absent (feeds committed by older engines
+                # may carry it, with this same value)
                 cols.append(pa.array([part.version] * n, type=field.type))
             elif field.name in present:
                 col = batch.column(field.name)

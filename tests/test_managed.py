@@ -332,28 +332,48 @@ def test_managed_delete_where_null_semantics_and_full_scan(spark, tmp_path):
 def test_managed_update_range_assignments_and_cdf(spark, tmp_path):
     """update_range: assignments evaluate against the PRE-update row,
     non-matching rows in touched files survive byte-identical, the
-    feed carries pre/post image pairs."""
-    t = ManagedTable(spark, str(tmp_path / "t"), index_cols=("k",))
-    t.write(_mk(spark, 0, 400).repartitionByRange(4, "k").sortWithinPartitions("k"))
-    v = t.update_range(
-        "k", 100, 149,
-        {"score": "score * 10", "tag": F.lit("boosted")},
-    )
-    assert v == 2
-    got = {r["k"]: (r["score"], r["tag"]) for r in t.read().collect()}
-    for k in range(400):
-        if 100 <= k <= 149:
-            assert got[k] == (k * 2.0 * 10, "boosted")
-        else:
-            assert got[k] == (k * 2.0, str(k % 7))
-    cdf = t.changes(2)
-    pre = {r["k"]: r["score"] for r in cdf.filter("_change_type = 'update_preimage'").collect()}
-    post = {r["k"]: r["score"] for r in cdf.filter("_change_type = 'update_postimage'").collect()}
-    assert set(pre) == set(post) == set(range(100, 150))
-    assert all(post[k] == pre[k] * 10 for k in pre)
-    # unknown column is refused loudly
-    with pytest.raises(ValueError, match="unknown columns"):
-        t.update_where("k = 1", {"nope": F.lit(1)})
+    feed carries pre/post image pairs. Both concurrency modes run the
+    same commit protocol, so they give equal rows and an equal
+    changes() frame, and the stored feed is unstamped in both."""
+    import pyarrow.parquet as pq
+
+    results = {}
+    for mode in ("exclusive", "optimistic"):
+        root = str(tmp_path / mode)
+        t = ManagedTable(spark, root, index_cols=("k",), concurrency=mode)
+        t.write(
+            _mk(spark, 0, 400)
+            .repartitionByRange(4, "k")
+            .sortWithinPartitions("k")
+        )
+        v = t.update_range(
+            "k", 100, 149,
+            {"score": "score * 10", "tag": F.lit("boosted")},
+        )
+        assert v == 2
+        got = {r["k"]: (r["score"], r["tag"]) for r in t.read().collect()}
+        for k in range(400):
+            if 100 <= k <= 149:
+                assert got[k] == (k * 2.0 * 10, "boosted")
+            else:
+                assert got[k] == (k * 2.0, str(k % 7))
+        cdf = t.changes(2)
+        pre = {r["k"]: r["score"] for r in cdf.filter("_change_type = 'update_preimage'").collect()}
+        post = {r["k"]: r["score"] for r in cdf.filter("_change_type = 'update_postimage'").collect()}
+        assert set(pre) == set(post) == set(range(100, 150))
+        assert all(post[k] == pre[k] * 10 for k in pre)
+        # the version number lives in the directory, not the stored feed
+        cdf_dir = os.path.join(root, "v=2", "_cdf")
+        for part in os.listdir(cdf_dir):
+            if part.endswith(".parquet"):
+                stored = pq.read_schema(os.path.join(cdf_dir, part)).names
+                assert "_commit_version" not in stored
+        assert cdf.columns[-2:] == ["_change_type", "_commit_version"]
+        # unknown column is refused loudly
+        with pytest.raises(ValueError, match="unknown columns"):
+            t.update_where("k = 1", {"nope": F.lit(1)})
+        results[mode] = (_rows(t.read()), cdf.columns, _rows(cdf))
+    assert results["exclusive"] == results["optimistic"]
 
 
 def test_managed_merge_upserts_and_inserts(spark, tmp_path):
@@ -601,8 +621,9 @@ def test_managed_changes_derivations(spark, tmp_path):
 
 def test_managed_dml_crash_and_lock_discipline(spark, tmp_path):
     """A DML crash after data/CDF writes but before the marker leaves
-    the table serving the old version, and vacuum reclaims the debris;
-    DML under a held writer lock is refused."""
+    the table serving the old version, and the failed commit removes
+    its own directory (no version dir, no staging dir is left); DML
+    under a held writer lock is refused."""
     t = ManagedTable(spark, str(tmp_path / "t"), index_cols=("k",))
     t.write(_mk(spark, 0, 200).repartitionByRange(2, "k").sortWithinPartitions("k"))
 
@@ -618,11 +639,10 @@ def test_managed_dml_crash_and_lock_discipline(spark, tmp_path):
         t._commit = real_commit
     assert t.latest() == 1 and t.versions() == [1]
     assert len(_rows(t.read())) == 200  # old version fully intact
-    # debris directory exists but is invisible; vacuum reclaims it
-    debris = [e for e in os.listdir(str(tmp_path / "t")) if e.startswith("v=")]
-    assert len(debris) == 2
-    t.vacuum(keep_last=1)
-    assert not os.path.isdir(str(tmp_path / "t" / "v=2"))
+    # the failed commit cleaned up after itself: no v=2, no staging
+    left = os.listdir(str(tmp_path / "t"))
+    assert "v=2" not in left
+    assert not [e for e in left if e.startswith(("_txn_", ".txn_setup_"))]
 
     # held lock => loud refusal, no version change
     lock = lockfile_path(str(tmp_path / "t"))
@@ -1524,7 +1544,7 @@ def test_managed_optimistic_disjoint_dml_rebases(spark, tmp_path):
     assert v2 == 2
 
     # T1 commits: validates v=2's removals against its read-set, rebases
-    v3 = t._commit_cow_optimistic(1, scan1, touched1, new_df1, cdf1, "delete")
+    v3 = t._commit_cow(1, scan1, touched1, new_df1, cdf1, "delete")
     assert v3 == 3
     assert t.lineage() == [1, 2, 3]
     got = t.read()
@@ -1560,7 +1580,7 @@ def test_managed_optimistic_overlapping_dml_aborts(spark, tmp_path):
     scan1, touched1, new_df1, cdf1, _cached1 = plan1
     assert t.delete_range("k", 0, 9) == 2
     with pytest.raises(CommitConflictError, match="removed"):
-        t._commit_cow_optimistic(1, scan1, touched1, new_df1, cdf1, "delete")
+        t._commit_cow(1, scan1, touched1, new_df1, cdf1, "delete")
     # no half-committed version, no staging debris
     assert t.versions() == [1, 2]
     assert not [
@@ -1576,7 +1596,7 @@ def test_managed_optimistic_overlapping_dml_aborts(spark, tmp_path):
     assert bounds == ("k", 1500, 1509)
     t.append(_mk(spark, 1505, 1520, parts=1))  # v3 adds keys IN range
     with pytest.raises(CommitConflictError, match="overlap"):
-        t._commit_cow_optimistic(
+        t._commit_cow(
             2, scan_m, touched_m, new_dfm, cdfm, "merge",
             merge_bounds=bounds,
         )
@@ -1586,7 +1606,7 @@ def test_managed_optimistic_overlapping_dml_aborts(spark, tmp_path):
     plan_s = t._merge_plan(3, src_safe, ("k",), None)
     scan_s, touched_s, new_dfs, cdfs, bounds_s = plan_s
     t.append(_mk(spark, 9000, 9010, parts=1))  # v4, far away
-    v5 = t._commit_cow_optimistic(
+    v5 = t._commit_cow(
         3, scan_s, touched_s, new_dfs, cdfs, "merge",
         merge_bounds=bounds_s,
     )
@@ -2094,7 +2114,7 @@ def test_managed_serializable_isolation(spark, tmp_path):
     v2 = ws.append(_mk(spark, 500, 505, parts=1))  # blind append, same range
     assert v2 == 2
     scan, touched, new_df, cdf, _cached = plan
-    v3 = ws._commit_cow_optimistic(
+    v3 = ws._commit_cow(
         1, scan, touched, new_df, cdf, "delete",
         pred_bounds=("k", 500, 509),
     )
@@ -2108,7 +2128,7 @@ def test_managed_serializable_isolation(spark, tmp_path):
     assert sz.append(_mk(spark, 500, 505, parts=1)) == 2
     scan, touched, new_df, cdf, _cached = plan
     with pytest.raises(CommitConflictError, match="serializable delete"):
-        sz._commit_cow_optimistic(
+        sz._commit_cow(
             1, scan, touched, new_df, cdf, "delete",
             pred_bounds=("k", 500, 509),
         )
@@ -2125,7 +2145,7 @@ def test_managed_serializable_isolation(spark, tmp_path):
     plan = sz._dml_plan(3, "delete", F.col("k").between(0, 9), None, ("k", 0, 9))
     assert sz.append(_mk(spark, 2000, 2010, parts=1)) == 4
     scan, touched, new_df, cdf, _cached = plan
-    v5 = sz._commit_cow_optimistic(
+    v5 = sz._commit_cow(
         3, scan, touched, new_df, cdf, "delete", pred_bounds=("k", 0, 9)
     )
     assert v5 == 5 and sz.read().filter("k < 10").count() == 0
@@ -2137,7 +2157,7 @@ def test_managed_serializable_isolation(spark, tmp_path):
     assert sz.append(_mk(spark, 3000, 3010, parts=1)) == 6
     scan, touched, new_df, cdf, _cached = plan
     with pytest.raises(CommitConflictError, match="not an indexed range"):
-        sz._commit_cow_optimistic(
+        sz._commit_cow(
             5, scan, touched, new_df, cdf, "delete", pred_bounds=None
         )
 
@@ -2232,7 +2252,7 @@ def test_managed_partitioned_optimistic_reference(spark, tmp_path):
     assert all(f.startswith("p=0/") for f in scan)
     v2 = t.delete_range("p", 1, 1)  # lands first, disjoint partition
     assert v2 == 2
-    v3 = t._commit_cow_optimistic(
+    v3 = t._commit_cow(
         1, scan, touched, new_df, cdf, "delete",
         pred_bounds=("p", 0, 0),
     )

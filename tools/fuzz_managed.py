@@ -13,7 +13,8 @@ Ops drawn per step (seeded PRNG — deterministic, replayable):
   rollback      pointer move to a random earlier live version (model
                 restored from a snapshot journal)
   vacuum        keep_last=2 (feed consumption happens first)
-  restart       re-instantiate the facade from the path
+  restart       re-instantiate the facade from the path (same
+                concurrency mode)
   concurrent    TWO optimistic writers (threads) mutate disjoint key
                 ranges at once — both must commit unless their
                 touched FILES overlap, in which case exactly one may
@@ -60,12 +61,18 @@ def run_seed(spark, seed: int, n_ops: int) -> None:
     # odd seeds run the object-store data plane (manifest references,
     # zero per-commit link syscalls); even seeds the hardlink plane;
     # seeds ≡ 2,3 (mod 4) run a PARTITIONED layout (p = k mod 4, so
-    # every DML crosses partition directories) — every op, invariant,
-    # and feed check below is plane- and layout-agnostic
+    # every DML crosses partition directories); seeds ≡ 4..7 (mod 8)
+    # run the single writer in optimistic mode (writer lock held only
+    # for the commit section) — every op, invariant, and feed check
+    # below is plane-, layout- and lock-scope-agnostic
     link_mode = "reference" if seed % 2 else "hardlink"
     partitioned = seed % 4 >= 2
     pcols = ("p",) if partitioned else ()
-    t = ManagedTable(spark, root, index_cols=("k",), link_mode=link_mode)
+    concurrency = "optimistic" if seed % 8 >= 4 else "exclusive"
+    t = ManagedTable(
+        spark, root, index_cols=("k",), link_mode=link_mode,
+        concurrency=concurrency,
+    )
     cursor = t.cursor(scratch + "/pos")
 
     has_extra = False
@@ -244,7 +251,8 @@ def run_seed(spark, seed: int, n_ops: int) -> None:
                 t.vacuum(keep_last=2)
         elif op == "restart":
             t = ManagedTable(
-                spark, root, index_cols=("k",), link_mode=link_mode
+                spark, root, index_cols=("k",), link_mode=link_mode,
+                concurrency=concurrency,
             )
             cursor = t.cursor(scratch + "/pos")
         elif op == "concurrent":
