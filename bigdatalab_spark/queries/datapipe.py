@@ -14,7 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from bigdatalab_spark.operators import money_sum
-from bigdatalab_spark.queries.registry import query
+from bigdatalab_spark.queries.registry import query, query_scratch
 from bigdatalab_spark.queries.tpch import dsum
 from bigdatalab_spark.scale.hashing import portable_hash_sql
 from bigdatalab_spark.sources import corpus_fingerprint, load_table
@@ -596,9 +596,6 @@ def incremental_dedup_index_status(spark: SparkSession, sf_dir: str) -> DataFram
     the SAME SQL as the self-contained query because the serve path is
     bit-identical by construction (shared classify core), which is
     exactly the property the oracle certifies here."""
-    import os
-    import tempfile
-
     from bigdatalab_spark.scale.dedup import (
         incremental_dedup_from_index,
         save_dedup_index,
@@ -607,12 +604,8 @@ def incremental_dedup_index_status(spark: SparkSession, sf_dir: str) -> DataFram
     docs = load_table(spark, sf_dir, "documents")
     corpus = docs.filter("doc_id % 2 = 0")
     batch = docs.filter("doc_id % 2 = 1")
-    idx = os.path.join(
-        tempfile.gettempdir(),
-        "bigdatalab_dedup_index",
-        os.path.basename(sf_dir.rstrip("/")) or "sf",
-    )
-    save_dedup_index(corpus, idx)  # overwrite-under-lock: rebuild per run
+    idx = query_scratch("dedup_index", sf_dir)
+    save_dedup_index(corpus, idx)
     return incremental_dedup_from_index(spark, batch, idx).orderBy("doc_id")
 
 
@@ -638,9 +631,6 @@ def dedup_index_forget_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     (:func:`~bigdatalab_spark.scale.dedup.purge_dedup_tombstones`) is
     covered by pytest, where bit-identity of the serve across the
     purge is pinned."""
-    import os
-    import tempfile
-
     from bigdatalab_spark.scale.dedup import (
         incremental_dedup_from_index,
         remove_from_dedup_index,
@@ -650,12 +640,8 @@ def dedup_index_forget_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     corpus = docs.filter("doc_id % 2 = 0")
     batch = docs.filter("doc_id % 2 = 1")
-    idx = os.path.join(
-        tempfile.gettempdir(),
-        "bigdatalab_dedup_forget_index",
-        os.path.basename(sf_dir.rstrip("/")) or "sf",
-    )
-    save_dedup_index(corpus, idx)  # overwrite-under-lock: rebuild per run
+    idx = query_scratch("dedup_forget_index", sf_dir)
+    save_dedup_index(corpus, idx)
     remove_from_dedup_index(corpus.filter("doc_id % 10 = 4").select("doc_id"), idx)
     return incremental_dedup_from_index(spark, batch, idx).orderBy("doc_id")
 
@@ -798,14 +784,13 @@ def streaming_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     admitted docs), so strict equality certifies the whole
     stream → classify → admit → re-classify loop, not one batch."""
     import os
-    import tempfile
     import time
 
     from bigdatalab_spark.scale.dedup import save_dedup_index
     from bigdatalab_spark.streaming.jobs import dedup_ingest_stream
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    scratch = tempfile.mkdtemp(prefix="dedup_ingest_")
+    scratch = query_scratch("streaming_dedup_ingest", sf_dir)
     idx, src = f"{scratch}/idx", f"{scratch}/src"
     save_dedup_index(docs.filter("doc_id % 2 = 0"), idx)
     docs.filter("doc_id % 4 = 1").coalesce(1).write.parquet(f"{src}/f1")

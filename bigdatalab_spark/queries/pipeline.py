@@ -11,7 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from bigdatalab_spark.queries.registry import query
+from bigdatalab_spark.queries.registry import query, query_scratch
 from bigdatalab_spark.sources import load_table
 
 _CHUNK, _OVERLAP = 32, 8
@@ -713,10 +713,8 @@ def sdp_quality_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     declare -> topologically-materialize -> read-back cycle against the
     single-query SQL restatement.
     """
-    import tempfile
-
     from bigdatalab_spark.pipelines.curation import run_curation_pipeline
 
-    storage = tempfile.mkdtemp(prefix="sdp_funnel_")
+    storage = query_scratch("sdp_quality_funnel", sf_dir)
     res = run_curation_pipeline(spark, sf_dir, storage)
     return res["quality_funnel"].orderBy("reason")

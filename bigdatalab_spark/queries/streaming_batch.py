@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from bigdatalab_spark.operators import money_sum
-from bigdatalab_spark.queries.registry import query
+from bigdatalab_spark.queries.registry import query, query_scratch
 from bigdatalab_spark.queries.tpch import dsum
 from bigdatalab_spark.sources import load_table
 
@@ -527,8 +527,6 @@ def statestore_user_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     touching the running query. One scan task per state partition, so
     inspection parallelism scales with the state layout itself.
     """
-    import tempfile
-
     from bigdatalab_spark.streaming.jobs import (
         run_stream_to_memory,
         stream_events,
@@ -536,7 +534,7 @@ def statestore_user_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from bigdatalab_spark.streaming.state_reader import grouped_count_state
 
-    scratch = tempfile.mkdtemp(prefix="statestore_q_")
+    scratch = query_scratch("statestore_user_counts", sf_dir)
     counts = stream_events(spark, sf_dir).groupBy("user_id").count()
     # user_id is a data-sized keyspace: size the drain's state
     # partitions from the input bytes (state_partitions_for_bytes) —

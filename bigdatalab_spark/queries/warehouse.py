@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from bigdatalab_spark.queries.registry import query
+from bigdatalab_spark.queries.registry import query, query_scratch
 from bigdatalab_spark.sources import load_table
 
 # Deterministic snapshot derivation shared by the Spark query and the
@@ -113,11 +113,9 @@ def streaming_cdc_applied(spark: SparkSession, sf_dir: str) -> DataFrame:
     lands EXACTLY the batch answer (order_col is a zero-padded
     (epoch_us, event_id) string, so last-writer is total even on ts
     ties)."""
-    import tempfile
-
     from bigdatalab_spark.streaming.jobs import apply_cdc_stream, stream_events
 
-    scratch = tempfile.mkdtemp(prefix="cdc_applied_")
+    scratch = query_scratch("streaming_cdc_applied", sf_dir)
     target = f"{scratch}/state"
     updates = stream_events(spark, sf_dir).select(
         "user_id",
@@ -173,20 +171,11 @@ def managed_table_pruned_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     index returns exactly the data's answer (skipping is a performance
     contract, never a correctness one). Decimal-exact sum via the
     engine's money_sum / DSUM oracle pair."""
-    import os
-    import shutil
-    import tempfile
-
     from bigdatalab_spark.operators import money_sum
     from bigdatalab_spark.sources.managed import ManagedTable
 
     events = load_table(spark, sf_dir, "events")
-    root = os.path.join(
-        tempfile.gettempdir(),
-        "bigdatalab_managed_table",
-        os.path.basename(sf_dir.rstrip("/")) or "sf",
-    )
-    shutil.rmtree(root, ignore_errors=True)  # scratch: rebuild per run
+    root = query_scratch("managed_table", sf_dir)
     t = ManagedTable(spark, root, index_cols=("user_id",))
     base = (
         events.filter("event_id % 2 = 0")
@@ -231,19 +220,10 @@ def managed_snapshot_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE into [lo, hi] bounds and the committed index prunes the file
     list at plan time, before any task launches; Spark re-applies the
     predicate, so skipping stays a performance contract only."""
-    import os
-    import shutil
-    import tempfile
-
     from bigdatalab_spark.sources.managed import ManagedTable
 
     events = load_table(spark, sf_dir, "events")
-    root = os.path.join(
-        tempfile.gettempdir(),
-        "bigdatalab_managed_snapshot_sql",
-        os.path.basename(sf_dir.rstrip("/")) or "sf",
-    )
-    shutil.rmtree(root, ignore_errors=True)  # scratch: rebuild per run
+    root = query_scratch("managed_snapshot_sql", sf_dir)
     t = ManagedTable(spark, root, index_cols=("user_id",))
     t.write(
         events.filter("event_id % 2 = 0")
@@ -272,21 +252,12 @@ def _dml_events_table(spark: SparkSession, sf_dir: str, name: str):
     the index, then MERGE a deterministic source (updates for users
     0-4 keyed on event_id + brand-new inserted keys). Returns the
     table and the two DML version numbers."""
-    import os
-    import shutil
-    import tempfile
-
     from bigdatalab_spark.sources.managed import ManagedTable
 
     base = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", "value"
     )
-    root = os.path.join(
-        tempfile.gettempdir(),
-        name,
-        os.path.basename(sf_dir.rstrip("/")) or "sf",
-    )
-    shutil.rmtree(root, ignore_errors=True)  # scratch: rebuild per run
+    root = query_scratch(name, sf_dir)
     t = ManagedTable(spark, root, index_cols=("user_id",))
     t.write(
         base.repartitionByRange(4, "user_id").sortWithinPartitions("user_id")
@@ -355,7 +326,7 @@ def managed_table_dml_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows SQL says survive. Decimal-exact sums via money_sum/DSUM."""
     from bigdatalab_spark.operators import money_sum
 
-    t, _, _ = _dml_events_table(spark, sf_dir, "bigdatalab_managed_dml")
+    t, _, _ = _dml_events_table(spark, sf_dir, "managed_dml")
     return (
         t.read()
         .groupBy("event_type")
@@ -410,7 +381,7 @@ def managed_table_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     from bigdatalab_spark.operators import money_sum
 
     t, v_del, v_merge = _dml_events_table(
-        spark, sf_dir, "bigdatalab_managed_cdf"
+        spark, sf_dir, "managed_cdf"
     )
     feed = t.changes(v_del).unionByName(t.changes(v_merge))
     return (
@@ -457,8 +428,6 @@ def managed_table_stream_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     (rank by ts DESC, event_id DESC), certifying stream → conditional
     merge → versioned snapshot end to end."""
     import os
-    import shutil
-    import tempfile
 
     from bigdatalab_spark.sources.managed import ManagedTable
     from bigdatalab_spark.streaming.jobs import (
@@ -466,12 +435,7 @@ def managed_table_stream_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream_events,
     )
 
-    scratch = os.path.join(
-        tempfile.gettempdir(),
-        "bigdatalab_managed_stream_merge",
-        os.path.basename(sf_dir.rstrip("/")) or "sf",
-    )
-    shutil.rmtree(scratch, ignore_errors=True)  # scratch: rebuild per run
+    scratch = query_scratch("managed_stream_merge", sf_dir)
     updates = stream_events(spark, sf_dir).select(
         "user_id",
         F.to_date(F.date_trunc("day", "ts")).cast("string").alias("day"),
@@ -542,7 +506,7 @@ def managed_table_changes_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     from bigdatalab_spark.sources.pyds import register_python_sources
 
     t, v_del, v_merge = _dml_events_table(
-        spark, sf_dir, "bigdatalab_managed_cdf_source"
+        spark, sf_dir, "managed_cdf_source"
     )
     register_python_sources(spark)
     feed = (
@@ -625,10 +589,6 @@ def managed_partitioned_dml(spark: SparkSession, sf_dir: str) -> DataFrame:
     delete → update → union in plain SQL over raw events, certifying
     partition reconstruction, referenced-file resolution, and the
     change feed in one hash."""
-    import os
-    import shutil
-    import tempfile
-
     from bigdatalab_spark.operators import money_sum
     from bigdatalab_spark.sources.managed import ManagedTable
     from bigdatalab_spark.sources.pyds import register_python_sources
@@ -637,12 +597,7 @@ def managed_partitioned_dml(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", "value"
     )
-    root = os.path.join(
-        tempfile.gettempdir(),
-        "bigdatalab_managed_part_dml",
-        os.path.basename(sf_dir.rstrip("/")) or "sf",
-    )
-    shutil.rmtree(root, ignore_errors=True)  # scratch: rebuild per run
+    root = query_scratch("managed_part_dml", sf_dir)
     t = ManagedTable(
         spark, root, index_cols=("user_id",), link_mode="reference"
     )
@@ -707,19 +662,10 @@ def managed_catalog_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     a NATIVE parquet scan (Catalyst column pruning + parquet filter
     pushdown), never the Python DataSource path. The oracle replays
     the lifecycle as a plain anti-range aggregate over raw events."""
-    import os
-    import shutil
-    import tempfile
-
     from bigdatalab_spark.operators import money_sum
     from bigdatalab_spark.sources.catalog import ManagedCatalog
 
-    root = os.path.join(
-        tempfile.gettempdir(),
-        "bigdatalab_managed_catalog",
-        os.path.basename(sf_dir.rstrip("/")) or "sf",
-    )
-    shutil.rmtree(root, ignore_errors=True)  # scratch: rebuild per run
+    root = query_scratch("managed_catalog", sf_dir)
     cat = ManagedCatalog(spark, root)
     events = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", "value"

@@ -30,6 +30,7 @@ from pyspark.sql.window import Window
 _LOG = logging.getLogger(__name__)
 
 from bigdatalab_spark.functions import normalize_text, tokenize, word_shingles
+from bigdatalab_spark.plans.compile import flat_plan_scope, overlap_actions
 from bigdatalab_spark.scale.hashing import (
     MINHASH_BANDS,
     MINHASH_COEFFS,
@@ -37,35 +38,6 @@ from bigdatalab_spark.scale.hashing import (
     minhash_value,
     portable_hash,
 )
-
-
-def _overlap_jobs(fns) -> None:
-    """Run independent Spark actions as CONCURRENT jobs (guide §2.6):
-    the scheduler happily runs several jobs at once inside one
-    application — actions are only sequential because driver code
-    calls them sequentially. Used for the dedup-index store writes,
-    which land in disjoint directories off one shared cached frame,
-    so a commit pays max(write) wall time instead of their sum.
-    Every submitted action runs to completion (a failed sibling can't
-    be cancelled mid-write any more than it could be un-run in the
-    sequential order — the commit marker is only written after this
-    returns); the first failure is re-raised once all have finished."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    fns = list(fns)
-    if len(fns) == 1:
-        fns[0]()
-        return
-    with ThreadPoolExecutor(max_workers=len(fns)) as pool:
-        futures = [pool.submit(fn) for fn in fns]
-        errs = []
-        for f in futures:
-            try:
-                f.result()
-            except BaseException as exc:  # noqa: PERF203
-                errs.append(exc)
-    if errs:
-        raise errs[0]
 
 
 def exact_dedup_groups(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -428,8 +400,6 @@ def _classify_batch(
         # ONE job instead of one per exchange (plans/compile.py); the
         # MAIN classify plan below keeps the session's AQE (its
         # shingle joins are store-sized and genuinely skewable).
-        from bigdatalab_spark.plans.compile import flat_plan_scope
-
         with flat_plan_scope(batch.sparkSession):
             cands = cands.persist()
             shard_vals = [
@@ -625,7 +595,7 @@ def save_dedup_index(
         ).write.mode("overwrite").partitionBy("shard").parquet(
             f"{path}/shingles"
         )
-        _overlap_jobs([
+        overlap_actions([
             lambda: bands.write.mode("overwrite").partitionBy(
                 "band"
             ).parquet(f"{path}/bands"),
@@ -701,7 +671,6 @@ def append_to_dedup_index(
     )
     n, cap, n_shards = meta["n"], meta["max_bucket_size"], meta["n_shards"]
 
-    from bigdatalab_spark.plans.compile import flat_plan_scope
     from bigdatalab_spark.sources.locks import dataset_write_lock
 
     with flat_plan_scope(spark):
@@ -760,7 +729,7 @@ def append_to_dedup_index(
         sh_new.withColumn(
             "shard", F.pmod(F.xxhash64("doc_id"), F.lit(n_shards)).cast("int")
         ).write.mode("append").partitionBy("shard").parquet(f"{path}/shingles")
-        _overlap_jobs([
+        overlap_actions([
             lambda: bands_new.write.mode("append").partitionBy(
                 "band"
             ).parquet(f"{path}/bands"),

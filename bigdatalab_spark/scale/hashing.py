@@ -66,8 +66,3 @@ def minhash_value(hash_col: Column, i: int) -> Column:
     """i-th permuted hash: (a_i * H + b_i) mod P."""
     a, b = MINHASH_COEFFS[i]
     return (hash_col * F.lit(a) + F.lit(b)) % F.lit(MINHASH_P)
-
-
-def minhash_value_sql(hash_expr: str, i: int) -> str:
-    a, b = MINHASH_COEFFS[i]
-    return f"(({hash_expr}) * {a} + {b}) % {MINHASH_P}"

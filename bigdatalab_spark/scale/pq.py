@@ -69,11 +69,10 @@ def train_codebooks(
     # that leaves most of the scheduler idle — run them from a small
     # thread pool so one fit's stages back-fill another's gaps (guide
     # §2.6 'overlap independent jobs'). Seeded fits: results are
-    # identical to the sequential loop; pool.map preserves order.
-    from concurrent.futures import ThreadPoolExecutor
+    # identical to the sequential loop, returned in subspace order.
+    from bigdatalab_spark.plans.compile import overlap_actions
 
-    with ThreadPoolExecutor(max_workers=min(m, 4)) as pool:
-        return list(pool.map(_fit, range(m)))
+    return overlap_actions([lambda s=s: _fit(s) for s in range(m)])
 
 
 def _sq_dist(a, b) -> F.Column:

@@ -97,7 +97,7 @@ import os
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from bigdatalab_spark.plans.compile import flat_plan_scope
+from bigdatalab_spark.plans.compile import flat_plan_scope, overlap_actions
 from bigdatalab_spark.sources.locks import (
     ConcurrentWriteError,
     dataset_write_lock,
@@ -1150,23 +1150,11 @@ class ManagedTable:
             plan = self._dml_plan(current, op, cond, assignments, prune)
             if plan is None:
                 return current  # no matches: the table is unchanged
-            scan_files, touched, new_df, cdf, cached = plan
-            try:
-                return self._commit_cow(
-                    current,
-                    scan_files,
-                    touched,
-                    new_df,
-                    cdf,
-                    op,
-                    # serializable isolation validates concurrently-ADDED
-                    # files against the predicate's indexed range (None =
-                    # unbounded predicate: any added file conflicts)
-                    pred_bounds=tuple(prune[:3]) if prune else None,
-                )
-            finally:
-                for c in cached:
-                    c.unpersist()
+            scan_files, touched, new_df, cdf, pred_bounds = plan
+            return self._commit_cow(
+                current, scan_files, touched, new_df, cdf, op,
+                pred_bounds=pred_bounds,
+            )
 
     def _dml_plan(
         self,
@@ -1180,9 +1168,13 @@ class ManagedTable:
         snapshot (no commit work): attribute matches to files
         (index-pruned when the predicate bounds an indexed column) and
         build the rewrite + change-feed plans. Returns
-        ``(scan_files, touched, new_df, cdf, cached)`` — ``cached``
-        lists the persisted frames the caller unpersists once the
-        commit has landed — or None when nothing matches."""
+        ``(scan_files, touched, new_df, cdf, pred_bounds)`` — as
+        :meth:`_merge_plan` does; ``pred_bounds`` is the predicate's
+        indexed range that serializable isolation validates
+        concurrently-ADDED files against (None = unbounded predicate:
+        any added file conflicts) — or None when nothing matches.
+        Nothing is persisted: the touched files are delta-sized, and
+        each of the commit's writes reads them from storage."""
         prev = _version_dir(self.path, current)
         all_files = _data_files(prev)
         cur_schema = self.stored_schema(current)
@@ -1222,34 +1214,18 @@ class ManagedTable:
         touched = sorted(att["fs"] or [])
         if not touched:
             return None
-        # validate BEFORE anything is persisted: a raise below this
-        # point would strand the persist (the caller's finally only
-        # unpersists plans that were returned)
-        tmp_cols = [f.name for f in (
-            cur_schema.fields
-            if cur_schema is not None
-            else self._read_files(current, touched, None).schema.fields
-        )]
+        touched_df = self._read_files(current, touched, cur_schema)
+        cols = touched_df.columns
         if op != "delete":
-            bad = sorted(set(assignments) - set(tmp_cols))
+            bad = sorted(set(assignments) - set(cols))
             if bad:
                 raise ValueError(f"update of unknown columns: {bad}")
-        # the touched files' rows feed the rewrite and the change feed
-        # (plus the clustered write's range-sampling pass) — persist so
-        # they are read from storage once, not once per action
-        # (unpersisted by the caller once the commit has landed)
-        with flat_plan_scope(self.spark):
-            touched_df = self._read_files(
-                current, touched, cur_schema
-            ).persist()
-        cols = touched_df.columns
         if op == "delete":
             new_df = touched_df.filter(~hit)
             cdf = touched_df.filter(hit).withColumn(
                 _CHANGE_TYPE, F.lit("delete")
             )
         else:
-            # (unknown-column validation already ran pre-persist above)
             exprs = {
                 c: (F.expr(v) if isinstance(v, str) else v)
                 for c, v in assignments.items()
@@ -1275,15 +1251,8 @@ class ManagedTable:
                 .withColumn(_CHANGE_TYPE, F.lit("update_postimage"))
             )
             cdf = pre.unionByName(post)
-        # force-fill the persisted touched-file rows before the commit's
-        # two OVERLAPPED writes both race to compute them: persist() is
-        # lazy and RDD cache fills are unsynchronized, so two concurrent
-        # first consumers would each read the touched files
-        with _job_label(
-            self.spark, f"managed {op}: plan cache fill"
-        ), flat_plan_scope(self.spark):
-            touched_df.count()
-        return scan_files, touched, new_df, cdf, [touched_df]
+        pred_bounds = tuple(prune[:3]) if prune else None
+        return scan_files, touched, new_df, cdf, pred_bounds
 
     def _cluster_rewrite(self, new_df: DataFrame, n_out: int) -> DataFrame:
         """Cluster a COW rewrite into ``n_out`` index-ranged output
@@ -1305,35 +1274,6 @@ class ManagedTable:
         if n_out == 1:
             return new_df.coalesce(1)
         return new_df.repartition(n_out)
-
-    def _overlap_writes(self, rewrite_fn, cdf_fn) -> None:
-        """Run the rewrite write and the change-feed write as two
-        CONCURRENT Spark jobs (guide §2.6 'overlap independent jobs'):
-        both read only the plan's delta-sized frames and land in
-        disjoint directories, so the commit pays max(rewrite, feed)
-        wall time instead of their sum — the feed's tasks back-fill
-        executor slots the rewrite's tail leaves idle. The feed
-        thread's exception is re-raised after both complete (either
-        failure aborts the commit before the marker lands, exactly as
-        the sequential order did)."""
-        from pyspark import InheritableThread
-
-        errs: list[BaseException] = []
-
-        def run_cdf():
-            try:
-                cdf_fn()
-            except BaseException as exc:  # re-raised after join
-                errs.append(exc)
-
-        th = InheritableThread(target=run_cdf, daemon=True)
-        th.start()
-        try:
-            rewrite_fn()
-        finally:
-            th.join()
-        if errs:
-            raise errs[0]
 
     def _commit_cow(
         self,
@@ -1403,7 +1343,11 @@ class ManagedTable:
                         os.path.join(work, _CDF_DIR)
                     )
 
-            self._overlap_writes(_do_rewrite, _do_cdf)
+            # both writes read only the plan's delta-sized frames and
+            # land in disjoint directories: run them as concurrent jobs,
+            # so the commit pays max(rewrite, feed) wall time; either
+            # failure aborts the commit before the marker lands
+            overlap_actions([_do_rewrite, _do_cdf])
             written = _walk_data_files(work)
             with self._commit_section(f"managed_{op}_commit"):
                 current = latest_version(self.path)

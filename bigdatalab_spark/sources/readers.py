@@ -127,10 +127,6 @@ def normalize_ts_layout(df: DataFrame) -> DataFrame:
     return df
 
 
-def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> list[DataFrame]:
-    return [load_table(spark, sf_dir, n) for n in (names or TABLES)]
-
-
 def register_views(spark: SparkSession, sf_dir: str, *names: str) -> None:
     """Register warehouse tables as temp views for ``spark.sql`` queries
     (303-spark-sql/README.md:99-101 createOrReplaceTempView pattern)."""

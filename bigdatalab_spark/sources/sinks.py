@@ -26,12 +26,6 @@ def write_text(df: DataFrame, path: str, single_file: bool = False) -> None:
     out.write.mode("overwrite").text(path)
 
 
-def write_csv(df: DataFrame, path: str, header: bool = True, sep: str = ",") -> None:
-    df.write.mode("overwrite").option("header", str(header).lower()).option(
-        "sep", sep
-    ).csv(path)
-
-
 def write_json(df: DataFrame, path: str, mode: str = "append") -> None:
     """JSON sink, append mode by default (K2, 303-spark-sql/README.md:55)."""
     df.write.mode(mode).json(path)
@@ -193,23 +187,15 @@ def overwrite_partitions(
     partitioned dataset without rewriting or dropping the rest).
 
     Spark's default ("static") overwrite mode deletes EVERY partition
-    under ``path`` first; the dynamic mode is a session conf, set here
-    for the duration of the write and restored after, so surrounding
-    code keeps whatever mode it configured.
+    under ``path`` first; the dynamic mode is passed as this write's
+    own ``partitionOverwriteMode`` option, so the session's mode is
+    never touched.
     """
     if not partition_cols:
         raise ValueError("overwrite_partitions requires partition columns")
-    spark = df.sparkSession
-    key = "spark.sql.sources.partitionOverwriteMode"
-    saved = spark.conf.get(key, None)
-    spark.conf.set(key, "dynamic")
-    try:
-        df.write.mode("overwrite").partitionBy(*partition_cols).parquet(path)
-    finally:
-        if saved is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, saved)
+    df.write.mode("overwrite").option(
+        "partitionOverwriteMode", "dynamic"
+    ).partitionBy(*partition_cols).parquet(path)
 
 
 def compact_partitions(

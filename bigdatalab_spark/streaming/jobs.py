@@ -16,6 +16,8 @@ do at all.
 
 from __future__ import annotations
 
+import contextlib
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -25,6 +27,9 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from bigdatalab_spark.plans.compile import conf_scope
+
 
 def _events_stream_schema(spark: SparkSession, sf_dir: str) -> StructType:
     """Stream schema matching the file's actual ``ts`` layout.
@@ -283,7 +288,6 @@ def run_stream_to_memory(
     :func:`state_partitions_for_bytes` partitions (same set/restore
     discipline). Mutually exclusive with ``expected_keys``."""
     spark = result.sparkSession
-    old_parts = None
     if expected_keys is not None and state_input_bytes is not None:
         raise ValueError(
             "pass expected_keys OR state_input_bytes, not both"
@@ -293,10 +297,11 @@ def run_stream_to_memory(
         parts = state_shuffle_partitions(spark, expected_keys)
     elif state_input_bytes is not None:
         parts = state_partitions_for_bytes(spark, state_input_bytes)
-    if parts is not None:
-        old_parts = spark.conf.get("spark.sql.shuffle.partitions", "200")
-        spark.conf.set("spark.sql.shuffle.partitions", str(parts))
-    try:
+    with (
+        contextlib.nullcontext()
+        if parts is None
+        else conf_scope(spark, {"spark.sql.shuffle.partitions": str(parts)})
+    ):
         writer = (
             result.writeStream.format("memory")
             .queryName(name)
@@ -307,9 +312,6 @@ def run_stream_to_memory(
             writer = writer.option("checkpointLocation", checkpoint_dir)
         q = writer.start()
         q.awaitTermination()
-    finally:
-        if old_parts is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", old_parts)
 
 
 def run_stream_to_console(

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import os
+
 from bigdatalab_spark.engine import Engine
 
 
@@ -230,3 +232,75 @@ def test_local_split_bytes_derivation(tmp_path):
     with open(big, "wb") as fh:
         fh.truncate(100 << 30)
     assert _local_split_bytes(str(d), cpus=32) == 128 << 20  # ceiling
+
+
+def test_cross_cutting_helpers_have_one_copy():
+    """Source guard: driver threads are started only by
+    ``plans/compile.py`` (``overlap_actions``), and registry queries
+    take scratch directories only from ``query_scratch`` — a second
+    copy of either concern fails here."""
+    import ast
+    import pathlib
+    import re
+
+    import bigdatalab_spark
+
+    pkg = pathlib.Path(bigdatalab_spark.__file__).parent
+    threads = re.compile(r"\b(ThreadPoolExecutor|InheritableThread|threading\.Thread)\b")
+    offenders = []
+    for path in sorted(pkg.rglob("*.py")):
+        rel = path.relative_to(pkg).as_posix()
+        if rel == "plans/compile.py":
+            continue
+        for no, line in enumerate(path.read_text().splitlines(), 1):
+            if threads.search(line):
+                offenders.append(f"{rel}:{no}: {line.strip()}")
+    registry = pkg / "queries" / "registry.py"
+    scratch_fn = next(
+        node
+        for node in ast.parse(registry.read_text()).body
+        if isinstance(node, ast.FunctionDef) and node.name == "query_scratch"
+    )
+    allowed = range(scratch_fn.lineno, scratch_fn.end_lineno + 1)
+    for path in sorted((pkg / "queries").glob("*.py")):
+        for no, line in enumerate(path.read_text().splitlines(), 1):
+            if "tempfile" in line and not (path == registry and no in allowed):
+                offenders.append(f"queries/{path.name}:{no}: {line.strip()}")
+    assert not offenders, offenders
+
+
+def test_registry_scratch_queries_leave_one_root_each(spark, sf_dir, tmp_path, monkeypatch):
+    """The queries that write streams, indexes or pipeline storage to
+    disk reuse one emptied root per (query, sf_dir): two runs of each
+    leave exactly one scratch root per query, with equal answers, and
+    no per-run temporary directory."""
+    import tempfile
+
+    from bigdatalab_spark.queries import REGISTRY
+
+    tmp = tmp_path / "tmp"
+    tmp.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp))
+    names = (
+        "statestore_user_counts",
+        "streaming_cdc_applied",
+        "streaming_dedup_ingest",
+        "sdp_quality_funnel",
+    )
+    for name in names:
+        runs = [
+            sorted(map(tuple, REGISTRY[name].fn(spark, sf_dir).collect()))
+            for _ in range(2)
+        ]
+        assert runs[0] == runs[1] and runs[0], name
+    leaked = sorted(
+        e
+        for e in os.listdir(tmp)
+        if e.startswith(("statestore_q_", "cdc_applied_", "dedup_ingest_", "sdp_funnel_"))
+    )
+    assert not leaked, leaked
+    roots = sorted(e for e in os.listdir(tmp) if e.startswith("bigdatalab_"))
+    assert roots == sorted(f"bigdatalab_{n}" for n in names), roots
+    base = os.path.basename(sf_dir.rstrip("/"))
+    for root in roots:
+        assert os.listdir(tmp / root) == [base], root

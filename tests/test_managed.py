@@ -595,6 +595,34 @@ def test_managed_merge_releases_cache_and_bounds_jobs(spark, tmp_path):
     assert t.latest() == 2
 
 
+def test_managed_delete_releases_cache_and_bounds_jobs(spark, tmp_path):
+    """DELETE plans without a cache, as MERGE does: a range delete
+    leaves no persisted RDD behind and runs a bounded number of Spark
+    jobs, so the touched-file cache and its fill job cannot creep
+    back in."""
+    import uuid
+
+    sc = spark.sparkContext
+    t = ManagedTable(spark, str(tmp_path / "t"), index_cols=("k",))
+    t.write(_mk(spark, 0, 600).repartitionByRange(6, "k").sortWithinPartitions("k"))
+    n_cached = sc._jsc.getPersistentRDDs().size()
+    group = f"managed-delete-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "managed delete job count")
+    try:
+        v = t.delete_range("k", 10, 19)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert v == 2 and t.read().count() == 590
+    assert t.changes(2).count() == 10
+    # measured: 2 for attribution, 1 for the rewrite write and 1 for
+    # the change-feed write; the persist-and-fill plan ran 5 (one more
+    # for the cache fill)
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert 0 < n_jobs <= 4, n_jobs
+    assert sc._jsc.getPersistentRDDs().size() <= n_cached
+
+
 def test_managed_changes_derivations(spark, tmp_path):
     """changes(): v1 = all inserts, append = the appended rows (derived
     from new files, no CDF write), compaction = empty feed, full

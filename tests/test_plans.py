@@ -541,3 +541,210 @@ def test_normalization_dedup_stats_shuffles_hashes_not_text(spark, sf_dir):
 
     for m in re.finditer(r"hashpartitioning\(([^)]*)\)", plan):
         assert "text#" not in m.group(1), m.group(0)
+
+
+def _drain_listener_bus(sc) -> None:
+    """Job starts reach the status tracker through the asynchronous
+    listener bus; wait until it has delivered them."""
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+
+
+def test_overlap_actions_jobs_carry_callers_group_and_description(spark, tmp_path):
+    """Jobs submitted by ``overlap_actions`` workers carry the caller's
+    job group and description, so they are counted for the caller's op
+    — including the overlapped store writes of ``append_to_dedup_index``
+    (no job of the append runs without the caller's group)."""
+    import uuid
+
+    from bigdatalab_spark.plans.compile import overlap_actions
+    from bigdatalab_spark.scale.dedup import append_to_dedup_index, save_dedup_index
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def probe():
+        spark.range(10).count()
+        return (
+            sc.getLocalProperty("spark.jobGroup.id"),
+            sc.getLocalProperty("spark.job.description"),
+        )
+
+    group = f"overlap-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "overlap probe")
+    try:
+        seen = overlap_actions([probe, probe, probe])
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert seen == [(group, "overlap probe")] * 3
+    _drain_listener_bus(sc)
+    assert len(tracker.getJobIdsForGroup(group)) >= 3
+
+    docs = spark.createDataFrame(
+        [(i, f"doc {i % 5} alpha beta gamma delta epsilon") for i in range(40)],
+        "doc_id long, text string",
+    )
+    idx = str(tmp_path / "idx")
+    save_dedup_index(docs.filter("doc_id < 20"), idx)
+    # every job id after this marker that has no group was submitted
+    # by a thread that lost the caller's group
+    marker = f"overlap-marker-{uuid.uuid4().hex}"
+    sc.setJobGroup(marker, "marker")
+    spark.range(1).count()
+    _drain_listener_bus(sc)
+    last = max(tracker.getJobIdsForGroup(marker))
+    group = f"overlap-append-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "dedup append")
+    try:
+        append_to_dedup_index(docs.filter("doc_id >= 20"), idx)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    _drain_listener_bus(sc)
+    ungrouped = [j for j in tracker.getJobIdsForGroup(None) if j > last]
+    assert ungrouped == [], ungrouped
+    # the shingles write on the caller's thread plus the three
+    # overlapped store writes
+    assert len([j for j in tracker.getJobIdsForGroup(group) if j > last]) >= 4
+
+
+def test_overlap_actions_results_in_call_order_and_failure_after_all(spark):
+    """Results come back in call order whatever order the callables
+    finish in, and the first failure is raised only once every
+    callable has finished."""
+    import threading
+
+    import pytest
+
+    from bigdatalab_spark.plans.compile import overlap_actions
+
+    last_done = threading.Event()
+
+    def slow_first():
+        assert last_done.wait(60)
+        return "first"
+
+    def fast_last():
+        last_done.set()
+        return "last"
+
+    assert overlap_actions([slow_first, lambda: "middle", fast_last]) == [
+        "first",
+        "middle",
+        "last",
+    ]
+
+    failed = threading.Event()
+    finished = []
+
+    def fail_at_once():
+        failed.set()
+        raise ValueError("first failure")
+
+    def finish_after_failure():
+        assert failed.wait(60)
+        spark.range(100).count()  # a real job, still running after the raise
+        finished.append("sibling")
+
+    def fail_later():
+        assert failed.wait(60)
+        raise RuntimeError("second failure")
+
+    with pytest.raises(ValueError, match="first failure"):
+        overlap_actions([fail_at_once, finish_after_failure, fail_later])
+    assert finished == ["sibling"]
+
+
+def test_conf_scope_restores_unset_keys_and_nests(spark):
+    """A key that was unset before the scope is unset again after it,
+    also when the block raises; nested scopes on one thread restore
+    level by level."""
+    import pytest
+
+    from bigdatalab_spark.plans.compile import conf_scope, flat_plan_scope
+
+    key = "spark.bigdatalab.test.scoped"
+    aqe = "spark.sql.adaptive.enabled"
+    assert spark.conf.get(key, None) is None
+    aqe_before = spark.conf.get(aqe)
+    with pytest.raises(RuntimeError):
+        with conf_scope(spark, {key: "outer"}):
+            assert spark.conf.get(key) == "outer"
+            raise RuntimeError("inside the scope")
+    assert spark.conf.get(key, None) is None
+
+    with conf_scope(spark, {key: "outer"}):
+        with flat_plan_scope(spark):
+            with conf_scope(spark, {key: "inner"}):
+                assert spark.conf.get(key) == "inner"
+                assert spark.conf.get(aqe) == "false"
+            assert spark.conf.get(key) == "outer"
+            assert spark.conf.get(aqe) == "false"
+        assert spark.conf.get(aqe) == aqe_before
+        assert spark.conf.get(key) == "outer"
+    assert spark.conf.get(key, None) is None
+    assert spark.conf.get(aqe) == aqe_before
+
+
+def test_conf_scope_threads_cannot_interleave_restores(spark, monkeypatch):
+    """Two threads whose AQE-off scopes would interleave (A enters, B
+    enters, A restores, B restores — B saving A's 'false' and restoring
+    it last) leave the session's original value. Events force the
+    schedule: B is already waiting for the scope lock when A exits."""
+    import threading
+
+    from bigdatalab_spark.plans import compile as plan_compile
+
+    class _SignallingLock:
+        """The scope lock, announcing each thread that asks for it."""
+
+        def __init__(self):
+            self._lock = threading.RLock()
+            self.asked = {}
+
+        def __enter__(self):
+            ev = self.asked.get(threading.current_thread().name)
+            if ev is not None:
+                ev.set()
+            self._lock.acquire()
+
+        def __exit__(self, *exc):
+            self._lock.release()
+
+    lock = _SignallingLock()
+    b_asked = lock.asked["scope-b"] = threading.Event()
+    monkeypatch.setattr(plan_compile, "_CONF_LOCK", lock)
+    aqe = "spark.sql.adaptive.enabled"
+    before = spark.conf.get(aqe)
+    a_in = threading.Event()
+    seen_by_b = []
+    errors = []
+
+    def scope_a():
+        try:
+            with plan_compile.flat_plan_scope(spark):
+                a_in.set()
+                assert b_asked.wait(60)
+        except Exception as exc:  # reported by the main thread below
+            errors.append(exc)
+
+    def scope_b():
+        try:
+            assert a_in.wait(60)
+            with plan_compile.flat_plan_scope(spark):
+                seen_by_b.append(spark.conf.get(aqe))
+        except Exception as exc:  # reported by the main thread below
+            errors.append(exc)
+
+    threads = [
+        threading.Thread(target=scope_a, name="scope-a"),
+        threading.Thread(target=scope_b, name="scope-b"),
+    ]
+    for th in threads:
+        th.start()
+    for th in threads:
+        th.join(120)
+        assert not th.is_alive(), th.name
+    assert not errors, errors
+    assert seen_by_b == ["false"]
+    assert spark.conf.get(aqe) == before

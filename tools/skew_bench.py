@@ -43,6 +43,7 @@ def _timed(df) -> float:
 def main() -> int:
     from pyspark.sql import functions as F
 
+    from bigdatalab_spark.plans.compile import conf_scope
     from bigdatalab_spark.session import get_session
     from bigdatalab_spark.sources import load_table
 
@@ -74,39 +75,30 @@ def main() -> int:
             "spark.sql.adaptive.skewJoin.skewedPartitionFactor": "2",
             "spark.sql.autoBroadcastJoinThreshold": "-1",
         }
-        saved = {k: spark.conf.get(k, None) for k in confs}
-        try:
-            for k, v in confs.items():
-                spark.conf.set(k, v)
-            def build():
-                return skewed.join(right, "k").agg(
-                    F.sum(
-                        F.col("l_extendedprice") * (1 - F.col("l_discount"))
-                    ).alias("rev"),
-                    F.count(F.lit(1)).alias("n"),
-                )
+        def build():
+            return skewed.join(right, "k").agg(
+                F.sum(
+                    F.col("l_extendedprice") * (1 - F.col("l_discount"))
+                ).alias("rev"),
+                F.count(F.lit(1)).alias("n"),
+            )
 
-            # a FRESH frame per timed run: re-collecting one QueryExecution
-            # reuses its materialized shuffle stages and times ~nothing
-            times = []
-            plan_split = False
+        # a FRESH frame per timed run: re-collecting one QueryExecution
+        # reuses its materialized shuffle stages and times ~nothing
+        times = []
+        plan_split = False
+        with conf_scope(spark, confs):
             for _ in range(2):
                 j = build()
                 times.append(_timed(j))
                 plan = j._jdf.queryExecution().executedPlan().toString()
                 plan_split = "skew=true" in plan
-            return {
-                "skew_handling": skew_on,
-                "threshold": threshold,
-                "secs": round(min(times), 2),
-                "plan_split": plan_split,
-            }
-        finally:
-            for k, v in saved.items():
-                if v is None:
-                    spark.conf.unset(k)
-                else:
-                    spark.conf.set(k, v)
+        return {
+            "skew_handling": skew_on,
+            "threshold": threshold,
+            "secs": round(min(times), 2),
+            "plan_split": plan_split,
+        }
 
     results = {
         "sf_dir": sf_dir,
