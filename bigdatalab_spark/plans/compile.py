@@ -10,7 +10,7 @@ SUBMITTED: one helper per cross-cutting concern.
   (below).
 - :func:`overlap_actions` runs independent Spark actions as
   concurrent jobs from a small pool whose threads inherit the caller's
-  job group and description.
+  job group, description and job tags.
 
 The lock imposes one condition: never WAIT inside a ``conf_scope`` on
 another driver thread that may enter one — a foreachBatch callback of
@@ -90,11 +90,20 @@ def overlap_actions(fns) -> list:
     order. Every callable runs to completion (a failed sibling cannot
     be cancelled mid-write any more than it could be un-run in a
     sequential order); the first failure is re-raised once all have
-    finished."""
+    finished. Given the active session, the wrapper also copies the
+    caller's job tags (``spark.addTag``) into each worker."""
+    from pyspark.sql import SparkSession
+
     # wrap on THIS thread, one wrapper per callable: each captures its
-    # own copy of the caller's local properties, so a worker's
-    # _job_label never writes into a sibling's
-    targets = [inheritable_thread_target(fn) for fn in fns]
+    # own copy of the caller's local properties and tags, so a
+    # worker's _job_label never writes into a sibling's
+    session = SparkSession.getActiveSession()
+    targets = [
+        inheritable_thread_target(session)(fn)
+        if session is not None
+        else inheritable_thread_target(fn)
+        for fn in fns
+    ]
     with ThreadPoolExecutor(max_workers=min(len(targets), 4)) as pool:
         futures = [pool.submit(t) for t in targets]
     errs = [e for e in (f.exception() for f in futures) if e is not None]

@@ -59,10 +59,20 @@ Scale design:
   to the touched files, not the table — at 100 TB, deleting one
   user's rows from a user-clustered table rewrites a handful of files.
   MERGE collects its delta-sized source to the driver once as Arrow:
-  the duplicate-key check, the key bounds and the split into
-  postimage and insert rows run in pyarrow, and the source re-enters
-  Spark as a ``LocalRelation`` with exact statistics, so every join
-  against it broadcasts without a shuffle and nothing is persisted.
+  the duplicate-key check and the key bounds run in pyarrow, and the
+  source re-enters Spark as a ``LocalRelation`` with exact
+  statistics, so every join against it broadcasts without a shuffle
+  and nothing is persisted.
+  The PLAN is chosen from the manifest before any job runs. A table
+  without partition columns whose candidate files sum to at most
+  ``COW_DRIVER_MAX_BYTES`` takes the DRIVER path: one Spark action
+  scans the candidates (joined to the source for MERGE), evaluates
+  the predicate, assignments or MATCHED condition and collects every
+  candidate row with ``toArrow()``; pyarrow assembles the touched
+  files' rewrite and the change feed and writes both into the
+  staging directory — no write job. Larger candidate sets and
+  partitioned tables take the Spark plan: an attribution scan, then
+  the rewrite and the change feed written by Spark.
 - METADATA PLANE: every committed version carries a ``_manifest``
   (one row per data file: relative name + size, landed before the
   marker like the index). Reads, DML attribution, and history() plan
@@ -122,6 +132,16 @@ _STREAM_BATCH = "_STREAM_BATCH"
 _SCHEMA_FILE = "_SCHEMA"
 _RESERVED = "_RESERVED"
 _PARTCOLS_FILE = "_PARTITION_COLS"
+# the scheme prefix ("file:/", "s3a://") of a scanned
+# _metadata.file_path URI, replaced by "/" when normalizing it
+_URI_SCHEME = r"^[a-zA-Z][a-zA-Z0-9+.\-]*:/+"
+
+
+def _norm_abs(path: str) -> str:
+    """A manifest file's absolute path in the form a scanned
+    ``_metadata.file_path`` normalizes to: rooted, scheme-free,
+    percent-decoded."""
+    return "/" + os.path.abspath(path).lstrip("/")
 
 
 def _partition_values(rel: str) -> dict[str, str | None]:
@@ -366,6 +386,68 @@ _INDEX_DRIVER_MAX_FILES = _env_int("SPARK_GRAFT_INDEX_DRIVER_MAX", 256)
 #: and the carried (reused) index side must itself be metadata-sized
 #: on disk for the driver path to copy it
 _INDEX_DRIVER_MAX_REUSE_BYTES = 64 << 20
+
+# Largest copy-on-write candidate set, in manifest size_bytes summed
+# over the index-pruned candidate files, that MERGE/DELETE/UPDATE decide
+# and rewrite on the driver. Every candidate row crosses to the driver
+# as Arrow, so the bound is set against spark.driver.maxResultSize (1g
+# by default in session.py). Parquet-to-Arrow expansion measured 2.2x on the
+# benchmark's table, 2.3x on a date/timestamp/decimal/array/map/
+# struct/binary/float table and 6.7x on a long key plus a 5-value
+# string column (10k-100k rows, snappy files written by Spark), so at
+# 32 MB even a 30x expansion stays under 1g. The rewrite and the change
+# feed are assembled from those rows: a few copies in the 8g driver heap.
+COW_DRIVER_MAX_BYTES = 32 << 20
+
+
+def _arrow_native(dt) -> bool:
+    """Whether a Spark type survives the driver copy-on-write path
+    unchanged: collected with ``toArrow()``, written by pyarrow and
+    read back by Spark as the same type. Other types (intervals,
+    variants, UDTs) keep the Spark path."""
+    from pyspark.sql import types as T
+
+    if isinstance(dt, T.ArrayType):
+        return _arrow_native(dt.elementType)
+    if isinstance(dt, T.MapType):
+        return _arrow_native(dt.keyType) and _arrow_native(dt.valueType)
+    if isinstance(dt, T.StructType):
+        return all(_arrow_native(f.dataType) for f in dt.fields)
+    return isinstance(
+        dt,
+        (
+            T.BooleanType, T.ByteType, T.ShortType, T.IntegerType,
+            T.LongType, T.FloatType, T.DoubleType, T.DecimalType,
+            T.StringType, T.BinaryType, T.DateType, T.TimestampType,
+            T.TimestampNTZType,
+        ),
+    )
+
+
+def _fresh_name(base: str, taken) -> str:
+    """``base`` with underscores appended until it names no column in
+    ``taken`` — helper columns never shadow a table column."""
+    while base in taken:
+        base += "_"
+    return base
+
+
+def _concat(parts):
+    """Concatenate Arrow tables of one column set and types, every
+    field made nullable (as Spark's parquet writer stores them)."""
+    import pyarrow as pa
+
+    schema = pa.schema([f.with_nullable(True) for f in parts[0].schema])
+    return pa.concat_tables([p.cast(schema) for p in parts])
+
+
+def _with_change_type(tbl, kind: str):
+    """``tbl`` plus a constant ``_change_type`` column."""
+    import pyarrow as pa
+
+    return tbl.append_column(
+        _CHANGE_TYPE, pa.array([kind] * tbl.num_rows, pa.string())
+    )
 
 
 def _index_arrow_schema(with_rowgroups: bool):
@@ -796,7 +878,9 @@ class ManagedTable:
             current = self._resolve(None)
             prev = _version_dir(self.path, current)
             df = self.read(current)
-            n_rows = df.count()
+            n_rows = self._indexed_row_count(current)
+            if n_rows is None:
+                n_rows = df.count()
             n_files = max(1, -(-n_rows // target_file_rows))
             version, vdir = self._allocate()
             # cluster so the compacted files' min/max stats come out
@@ -846,6 +930,28 @@ class ManagedTable:
                 pcols=pcols,
             )
 
+    def _indexed_row_count(self, version: int) -> int | None:
+        """The version's row count from its stored index — each file's
+        footer ``n_rows``, recorded at commit — with no Spark job. None
+        when the table has no index, the index is not metadata-sized,
+        or it misses a live file; callers then count the rows."""
+        if not self.index_cols:
+            return None
+        vdir = _version_dir(self.path, version)
+        idx_dir = os.path.join(vdir, _INDEX_DIR)
+        if _index_dir_bytes(idx_dir) > _INDEX_DRIVER_MAX_REUSE_BYTES:
+            return None
+        tbl = _read_index_table(idx_dir)
+        if tbl is None or "n_rows" not in tbl.column_names:
+            return None
+        per_file = dict(
+            zip(tbl.column("file").to_pylist(), tbl.column("n_rows").to_pylist())
+        )
+        counts = [per_file.get(f) for f in _data_files(vdir)]
+        if any(n is None for n in counts):
+            return None
+        return sum(counts)
+
     # ---- row-level DML (copy-on-write) -----------------------------------
 
     def delete_where(self, condition: Column | str) -> int:
@@ -857,7 +963,13 @@ class ManagedTable:
         (:meth:`changes`). Rows where ``condition`` is NULL are KEPT
         (SQL DELETE semantics: only TRUE deletes). No matches → no new
         version (returns the current one). Cost is proportional to the
-        TOUCHED files, not the table."""
+        TOUCHED files, not the table.
+
+        Unpartitioned tables whose candidate files sum to at most
+        ``COW_DRIVER_MAX_BYTES`` are decided and rewritten on the
+        driver (one Spark scan collected as Arrow, pyarrow writes);
+        others run the Spark plan. Both give the same table and the
+        same change feed."""
         return self._cow_rewrite("delete", condition, None, None)
 
     def delete_range(self, col: str, lo, hi, extra: Column | str | None = None) -> int:
@@ -882,7 +994,11 @@ class ManagedTable:
         expression strings, evaluated against the PRE-update row, as in
         SQL UPDATE), non-matching rows in touched files are rewritten
         unchanged, untouched files hard-link. The change feed records
-        update_preimage/update_postimage row pairs."""
+        update_preimage/update_postimage row pairs. Each assigned value
+        is cast to its column's type, as SQL UPDATE stores it. The
+        plan is chosen as for :meth:`delete_where`: the driver path up
+        to ``COW_DRIVER_MAX_BYTES`` of unpartitioned candidate files,
+        the Spark plan above it."""
         return self._cow_rewrite("update", condition, assignments, None)
 
     def update_range(
@@ -944,7 +1060,17 @@ class ManagedTable:
         DRIVER once, as Arrow: a source larger than
         ``spark.driver.maxResultSize`` fails loudly in that collect,
         before anything is written, instead of merging slowly. Split
-        such a source into several merges."""
+        such a source into several merges.
+
+        The plan is chosen from the manifest before any job runs. On a
+        table without partition columns whose candidate files sum to
+        at most ``COW_DRIVER_MAX_BYTES``, one Spark action joins the
+        candidates to the source, evaluates ``when_matched`` and
+        collects every candidate row as Arrow; pyarrow builds and
+        writes the rewrite and the change feed, with no write job.
+        Partitioned tables and larger candidate sets run the Spark
+        plan (attribution scan, then Spark writes). Both plans give the
+        same table and the same change feed."""
         keys = (keys,) if isinstance(keys, str) else tuple(keys)
         with self._op_lock("managed_merge"):
             current = self._resolve(None)
@@ -972,9 +1098,11 @@ class ManagedTable:
     ):
         """MERGE compute phase against the pinned ``current`` snapshot
         (no commit work): validates the source, attributes matches to
-        files, and builds the rewrite + change-feed plans. Returns
-        ``(scan_files, touched, new_df, cdf, key_bounds)`` — or None
-        when the merge is a no-op. ``key_bounds`` is ``(col, lo, hi)``
+        files, and builds the rewrite and the change feed. Returns
+        ``(scan_files, touched, new_df, cdf, key_bounds)`` — the two
+        middle items DataFrames on the Spark plan, Arrow tables on the
+        driver path (:meth:`_merge_on_driver`) — or None when the
+        merge is a no-op. ``key_bounds`` is ``(col, lo, hi)``
         of the source's leading key when it is indexed (the optimistic
         validator uses it to detect concurrently-added files that could
         hide a match), else None (validator is then conservative).
@@ -1026,6 +1154,12 @@ class ManagedTable:
         if keys[0] in self.index_cols and lo is not None:
             key_bounds = (keys[0], lo, hi)
             scan_files = self.candidate_files(keys[0], lo, hi, current)
+        if self._cow_on_driver(current, scan_files, tgt_schema):
+            touched, new, cdf = self._merge_on_driver(
+                current, scan_files, tgt_schema, tbl, src_schema, keys,
+                when_matched,
+            )
+            return scan_files, touched, new, cdf, key_bounds
 
         def local(t):
             # an all-false filter leaves zero chunks per column, which
@@ -1061,9 +1195,7 @@ class ManagedTable:
         else:
             # join the key columns and a row id only: Arrow's hash join
             # rejects nested (list/map/struct) non-key columns
-            rid = "__bdl_row__"
-            while rid in tgt_cols:
-                rid += "_"
+            rid = _fresh_name("__bdl_row__", tgt_cols)
             probe = tbl.select(list(keys)).append_column(
                 rid, pa.array(np.arange(tbl.num_rows))
             )
@@ -1134,6 +1266,199 @@ class ManagedTable:
         ).unionByName(ins.select(*tgt_cols, _CHANGE_TYPE))
         return scan_files, touched, new_df, cdf, key_bounds
 
+    def _merge_on_driver(
+        self,
+        current: int,
+        scan_files: list[str],
+        tgt_schema,
+        tbl,
+        src_schema,
+        keys: tuple[str, ...],
+        when_matched: Column | str | None,
+    ):
+        """The driver path of :meth:`_merge_plan`: ONE Spark action
+        left-joins the candidate files to the source (``tbl``, already
+        on the driver) and collects every candidate row with the id of
+        the source row it matches and, under ``when_matched``, whether
+        the condition takes it. pyarrow then builds the rewrite and the
+        change feed. Returns ``(touched, rewrite, cdf)`` as Arrow
+        tables in the target's column order."""
+        import numpy as np
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        from pyspark.sql import types as T
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        tgt_cols = [f.name for f in tgt_schema.fields]
+        # the source in the target's types (what Spark's union widens
+        # to on the Spark path), converted as toArrow() converts them
+        src_t = tbl.cast(
+            pa.schema(
+                f.with_nullable(True)
+                for f in to_arrow_schema(
+                    tgt_schema,
+                    prefers_large_types=self.spark._jconf.arrowUseLargeVarTypes(),
+                )
+            )
+        )
+        if not scan_files:  # nothing can match: every row is an insert
+            return [], src_t, _with_change_type(src_t, "insert")
+        sid = _fresh_name("__sid", tgt_cols)
+        take = _fresh_name("__take", tgt_cols)
+        n_src = tbl.num_rows
+        src = self.spark.createDataFrame(
+            tbl.append_column(sid, pa.array(np.arange(n_src))),
+            schema=T.StructType(
+                src_schema.fields + [T.StructField(sid, T.LongType(), False)]
+            ),
+        )
+        cond = (
+            F.lit(True)
+            if when_matched is None
+            else F.expr(when_matched)
+            if isinstance(when_matched, str)
+            else when_matched
+        )
+        joined = (
+            self._read_files(current, scan_files, tgt_schema, with_path=True)
+            .alias("t")
+            .join(
+                src.alias("s"),
+                on=[F.col(f"t.{k}") == F.col(f"s.{k}") for k in keys],
+                how="left",
+            )
+            .select(
+                *[F.col(f"t.{c}").alias(c) for c in tgt_cols],
+                F.col("t.__path").alias("__path"),
+                F.col(f"s.{sid}").alias(sid),
+                # NULL condition = no update, as in SQL MERGE
+                F.coalesce(cond, F.lit(False)).alias(take),
+            )
+        )
+        res = self._scan_on_driver(current, scan_files, joined, "merge")
+        files = res.column("__file")
+        touched = sorted(
+            pc.unique(files.filter(pc.is_valid(res.column(sid)))).to_pylist()
+        )
+        rows = res.filter(
+            pc.is_in(files, value_set=pa.array(touched, pa.string()))
+        )
+        tgt_t = rows.select(tgt_cols)
+        m = pc.is_valid(rows.column(sid))
+        ids = rows.column(sid).filter(m)
+        # source rows whose key is stored in a touched file are
+        # postimages, the rest inserts; equality never holds for a
+        # NULL key, so NULL-key rows are always inserts
+        hit = pc.is_in(pa.array(np.arange(n_src)), value_set=pc.unique(ids))
+        inserts = src_t.filter(pc.invert(hit))
+        keep = tgt_t.filter(pc.invert(m))
+        if when_matched is None:
+            # duplicate target keys collapse to the one source row
+            pre = tgt_t.filter(m)
+            post = src_t.filter(hit)
+            new = _concat([keep, src_t])
+        else:
+            # each matched target row is decided on its own
+            t_m = rows.filter(m)
+            taken = t_m.filter(t_m.column(take))
+            from_src = src_t.take(taken.column(sid))
+            pre = taken.select(tgt_cols)
+            post = pa.table(
+                {
+                    c: taken.column(c) if c in keys else from_src.column(c)
+                    for c in tgt_cols
+                }
+            )
+            new = _concat(
+                [
+                    keep,
+                    t_m.filter(pc.invert(t_m.column(take))).select(tgt_cols),
+                    post,
+                    inserts,
+                ]
+            )
+        cdf = _concat(
+            [
+                _with_change_type(pre, "update_preimage"),
+                _with_change_type(post, "update_postimage"),
+                _with_change_type(inserts, "insert"),
+            ]
+        )
+        return touched, new, cdf
+
+    def _cow_on_driver(
+        self, current: int, scan_files: list[str], schema
+    ) -> bool:
+        """Plan choice for copy-on-write DML, made from what the
+        manifest already knows before any job runs (Shark's partial
+        DAG execution rule): the driver path serves a table without
+        partition columns whose candidate files sum to at most
+        ``COW_DRIVER_MAX_BYTES`` and whose columns all round-trip
+        through Arrow (:func:`_arrow_native`); anything else takes the
+        Spark plan."""
+        if schema is None or not all(
+            _arrow_native(f.dataType) for f in schema.fields
+        ):
+            return False
+        if self.partition_cols_of(current):
+            return False
+        rows = _manifest_rows(_version_dir(self.path, current))
+        if rows is None:  # legacy version: sizes unknown
+            return False
+        # an empty candidate set (a merge whose key range reaches no
+        # file) sums to 0 and fits any bound: nothing is scanned
+        want = set(scan_files)
+        return (
+            sum(r["size_bytes"] for r in rows if r["file"] in want)
+            <= COW_DRIVER_MAX_BYTES
+        )
+
+    def _scan_on_driver(
+        self, current: int, scan_files: list[str], frame: DataFrame, op: str
+    ):
+        """Collect ``frame`` — a plan over the candidate files carrying
+        their ``__path`` — with ``toArrow()`` in ONE Spark action, and
+        swap ``__path`` for ``__file``, the relative manifest name. The
+        distinct paths are looked up in the manifest rows on the
+        driver: path count, not row count, bounds the lookup."""
+        import re
+        from urllib.parse import unquote
+
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        if "__file" in frame.columns:
+            raise ValueError(
+                "DML reserves the __file column for file attribution"
+            )
+        with _job_label(self.spark, f"managed {op}: driver scan"):
+            res = frame.toArrow()
+        want = set(scan_files)
+        name_of = {
+            _norm_abs(r["abs"]): r["file"]
+            for r in self._rows_of(current)
+            if r["file"] in want
+        }
+        paths = res.column("__path")
+        distinct = pc.unique(paths)
+        names = []
+        for p in distinct.to_pylist():
+            # _metadata.file_path is a URI: scheme and percent-encoding
+            name = name_of.get(unquote(re.sub(_URI_SCHEME, "/", p)))
+            if name is None:
+                raise RuntimeError(
+                    f"{op} attribution could not map a scanned file "
+                    f"path back to the manifest ({p}) — path "
+                    "normalization mismatch"
+                )
+            names.append(name)
+        files = pc.take(
+            pa.array(names, pa.string()),
+            pc.index_in(paths, value_set=distinct),
+        )
+        i = res.schema.get_field_index("__path")
+        return res.set_column(i, "__file", files)
+
     def _cow_rewrite(
         self,
         op: str,
@@ -1167,9 +1492,10 @@ class ManagedTable:
         """DELETE/UPDATE compute phase against the pinned ``current``
         snapshot (no commit work): attribute matches to files
         (index-pruned when the predicate bounds an indexed column) and
-        build the rewrite + change-feed plans. Returns
+        build the rewrite and the change feed. Returns
         ``(scan_files, touched, new_df, cdf, pred_bounds)`` — as
-        :meth:`_merge_plan` does; ``pred_bounds`` is the predicate's
+        :meth:`_merge_plan` does, Arrow tables on the driver path
+        (:meth:`_dml_on_driver`); ``pred_bounds`` is the predicate's
         indexed range that serializable isolation validates
         concurrently-ADDED files against (None = unbounded predicate:
         any added file conflicts) — or None when nothing matches.
@@ -1184,6 +1510,14 @@ class ManagedTable:
             else all_files
         )
         hit = F.coalesce(cond, F.lit(False))  # NULL never matches
+        pred_bounds = tuple(prune[:3]) if prune else None
+        if self._cow_on_driver(current, scan_files, cur_schema):
+            plan = self._dml_on_driver(
+                current, op, scan_files, cur_schema, hit, assignments
+            )
+            if plan is None:
+                return None
+            return (scan_files, *plan, pred_bounds)
         # metadata-sized: bounded by the snapshot file count. ONE
         # global aggregation (partial collect_set per partition →
         # final single-partition merge) instead of the extra exchange
@@ -1226,8 +1560,12 @@ class ManagedTable:
                 _CHANGE_TYPE, F.lit("delete")
             )
         else:
+            # each value is stored as its column's type, as SQL UPDATE
+            # assigns: an uncast ``f * 2`` on a float column would land
+            # a double the stored schema cannot read back
+            types = {f.name: f.dataType for f in touched_df.schema.fields}
             exprs = {
-                c: (F.expr(v) if isinstance(v, str) else v)
+                c: (F.expr(v) if isinstance(v, str) else v).cast(types[c])
                 for c, v in assignments.items()
             }
             updated = [
@@ -1251,8 +1589,78 @@ class ManagedTable:
                 .withColumn(_CHANGE_TYPE, F.lit("update_postimage"))
             )
             cdf = pre.unionByName(post)
-        pred_bounds = tuple(prune[:3]) if prune else None
         return scan_files, touched, new_df, cdf, pred_bounds
+
+    def _dml_on_driver(
+        self,
+        current: int,
+        op: str,
+        scan_files: list[str],
+        schema,
+        hit: Column,
+        assignments: dict[str, Column | str] | None,
+    ):
+        """The driver path of :meth:`_dml_plan`: ONE Spark action
+        collects every candidate row with its ``hit`` flag and, for
+        UPDATE, each assigned column's new value (the Spark plan's own
+        ``when(hit, expr).otherwise(col)``); pyarrow then builds the
+        touched files' rewrite and the change feed. Returns
+        ``(touched, rewrite, cdf)`` as Arrow tables, or None when no
+        row matches."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        cols = schema.names
+        if not scan_files:
+            return None
+        flag = _fresh_name("__hit", cols)
+        new_vals = {}
+        for c, v in (assignments or {}).items():
+            if c in cols:
+                e = (F.expr(v) if isinstance(v, str) else v).cast(schema[c].dataType)
+                new_vals[c] = (
+                    _fresh_name(f"__set_{c}", cols),
+                    F.when(hit, e).otherwise(F.col(c)),
+                )
+        frame = self._read_files(
+            current, scan_files, schema, with_path=True
+        ).select(
+            *cols,
+            "__path",
+            hit.alias(flag),
+            *[e.alias(name) for name, e in new_vals.values()],
+        )
+        res = self._scan_on_driver(current, scan_files, frame, op)
+        files = res.column("__file")
+        touched = sorted(pc.unique(files.filter(res.column(flag))).to_pylist())
+        if not touched:
+            return None
+        if op != "delete":
+            bad = sorted(set(assignments) - set(cols))
+            if bad:
+                raise ValueError(f"update of unknown columns: {bad}")
+        rows = res.filter(
+            pc.is_in(files, value_set=pa.array(touched, pa.string()))
+        )
+        m = rows.column(flag)
+        old = rows.select(cols)
+        if op == "delete":
+            new = old.filter(pc.invert(m))
+            cdf = _concat([_with_change_type(old.filter(m), "delete")])
+            return touched, _concat([new]), cdf
+        new = old
+        for c, (name, _) in new_vals.items():
+            new = new.set_column(
+                cols.index(c), c, rows.column(name)
+            )
+        new = _concat([new])
+        cdf = _concat(
+            [
+                _with_change_type(old.filter(m), "update_preimage"),
+                _with_change_type(new.filter(m), "update_postimage"),
+            ]
+        )
+        return touched, new, cdf
 
     def _cluster_rewrite(self, new_df: DataFrame, n_out: int) -> DataFrame:
         """Cluster a COW rewrite into ``n_out`` index-ranged output
@@ -1280,17 +1688,19 @@ class ManagedTable:
         base: int,
         read_set: list[str],
         touched: list[str],
-        new_df: DataFrame,
-        cdf: DataFrame,
+        new_df,
+        cdf,
         op: str,
         stream_batch_id: int | None = None,
         merge_bounds: tuple | None = None,
         pred_bounds: tuple | None = None,
     ) -> int:
         """Land a copy-on-write version computed against ``base``. The
-        delta (the rewritten rows + the change feed) is written to a
-        staging directory — in optimistic mode with no lock held, so
-        the expensive Spark work runs concurrently with other writers.
+        delta (the rewritten rows + the change feed, both DataFrames
+        from the Spark plan or both Arrow tables from the driver path)
+        is written to a staging directory — in optimistic mode with no
+        lock held, so the expensive work runs concurrently with other
+        writers.
         The commit section then re-reads the pointer and, if it moved
         past ``base``, validates against every commit since
         (:meth:`_validate_rebase`); it renames the staging directory
@@ -1303,51 +1713,16 @@ class ManagedTable:
         transaction ever becomes visible."""
         import shutil
 
+        from pyspark.sql.pandas.types import from_arrow_schema
+
         self._guard_granularity_upgrade(base, op)
+        pcols = self.partition_cols_of(base)
         work = self._allocate_staging()
         try:
-            # optimized write: the rewrite is delta-sized (touched
-            # files' rows + the merge batch), but it arrives on
-            # shuffle-partition parallelism — written raw, every DML
-            # would scatter ~32 small files and destroy the rewritten
-            # rows' clustering, bloating both the file count and the
-            # index's selectivity (the soak bench caught exactly this
-            # drift). Re-range on the index columns into ~one file per
-            # touched input file instead; the small extra shuffle is
-            # delta-sized by construction.
-            n_out = max(1, len(touched) + (1 if op == "merge" else 0))
-            new_df = self._cluster_rewrite(new_df, n_out)
-            pcols = self.partition_cols_of(base)
-            # append mode: the staging dir exists (and is ours alone);
-            # the change feed is written UNSTAMPED — the commit version
-            # is unknown until the commit section allocates it, and
-            # readers stamp it from the directory
-            writer = new_df.write.mode("append")
-            if pcols:
-                # partitioned table: the rewrite lands under the same
-                # col=val/ directory layout, so partition pruning keeps
-                # composing with the file-skipping index
-                writer = writer.partitionBy(*pcols)
-
-            def _do_rewrite():
-                with _job_label(
-                    self.spark, f"managed {op}: rewrite write"
-                ):
-                    writer.parquet(work)
-
-            def _do_cdf():
-                with _job_label(
-                    self.spark, f"managed {op}: change-feed write"
-                ):
-                    cdf.write.mode("append").parquet(
-                        os.path.join(work, _CDF_DIR)
-                    )
-
-            # both writes read only the plan's delta-sized frames and
-            # land in disjoint directories: run them as concurrent jobs,
-            # so the commit pays max(rewrite, feed) wall time; either
-            # failure aborts the commit before the marker lands
-            overlap_actions([_do_rewrite, _do_cdf])
+            if isinstance(new_df, DataFrame):
+                self._write_delta_spark(work, touched, new_df, cdf, op, pcols)
+            else:
+                self._write_delta_local(work, touched, new_df, cdf)
             written = _walk_data_files(work)
             with self._commit_section(f"managed_{op}_commit"):
                 current = latest_version(self.path)
@@ -1375,7 +1750,11 @@ class ManagedTable:
                 version, work = self._promote(work)
                 schema = self.stored_schema(current)
                 if schema is None:
-                    schema = new_df.schema
+                    schema = (
+                        new_df.schema
+                        if isinstance(new_df, DataFrame)
+                        else from_arrow_schema(new_df.schema)
+                    )
                 # under link_mode="reference" the carry writes NO
                 # per-file syscalls — the critical section's cost is
                 # O(delta), not O(live files), however large the snapshot
@@ -1394,6 +1773,91 @@ class ManagedTable:
         except BaseException:
             shutil.rmtree(work, ignore_errors=True)
             raise
+
+    def _write_delta_spark(
+        self,
+        work: str,
+        touched: list[str],
+        new_df: DataFrame,
+        cdf: DataFrame,
+        op: str,
+        pcols: tuple[str, ...],
+    ) -> None:
+        """Write a Spark-planned delta — the rewrite and the change
+        feed — into the staging directory ``work``."""
+        # optimized write: the rewrite is delta-sized (touched
+        # files' rows + the merge batch), but it arrives on
+        # shuffle-partition parallelism — written raw, every DML
+        # would scatter ~32 small files and destroy the rewritten
+        # rows' clustering, bloating both the file count and the
+        # index's selectivity (the soak bench caught exactly this
+        # drift). Re-range on the index columns into ~one file per
+        # touched input file instead; the small extra shuffle is
+        # delta-sized by construction.
+        n_out = max(1, len(touched) + (1 if op == "merge" else 0))
+        new_df = self._cluster_rewrite(new_df, n_out)
+        # append mode: the staging dir exists (and is ours alone);
+        # the change feed is written UNSTAMPED — the commit version
+        # is unknown until the commit section allocates it, and
+        # readers stamp it from the directory
+        writer = new_df.write.mode("append")
+        if pcols:
+            # partitioned table: the rewrite lands under the same
+            # col=val/ directory layout, so partition pruning keeps
+            # composing with the file-skipping index
+            writer = writer.partitionBy(*pcols)
+
+        def _do_rewrite():
+            with _job_label(self.spark, f"managed {op}: rewrite write"):
+                writer.parquet(work)
+
+        def _do_cdf():
+            with _job_label(
+                self.spark, f"managed {op}: change-feed write"
+            ):
+                cdf.write.mode("append").parquet(
+                    os.path.join(work, _CDF_DIR)
+                )
+
+        # both writes read only the plan's delta-sized frames and
+        # land in disjoint directories: run them as concurrent jobs,
+        # so the commit pays max(rewrite, feed) wall time; either
+        # failure aborts the commit before the marker lands
+        overlap_actions([_do_rewrite, _do_cdf])
+
+    def _write_delta_local(self, work: str, touched: list[str], new, cdf) -> None:
+        """Write a driver-assembled delta (Arrow tables) into the
+        staging directory ``work`` with pyarrow, no Spark job: the
+        rewrite sorted on the index columns (nulls first, as Spark
+        sorts) and split by row count into one file per touched file —
+        the same clustering the Spark plan buys with a range-sampling
+        pass — and the change feed, unstamped, as one file. An empty
+        rewrite writes no data file."""
+        import uuid
+
+        import pyarrow.parquet as pq
+
+        token = uuid.uuid4().hex
+        keys = [c for c in self.index_cols if c in new.column_names]
+        if keys:
+            new = new.sort_by(
+                [(c, "ascending") for c in keys], null_placement="at_start"
+            )
+        step = -(-new.num_rows // max(1, len(touched)))
+        for i, start in enumerate(range(0, new.num_rows, step or 1)):
+            pq.write_table(
+                new.slice(start, step),
+                os.path.join(
+                    work, f"part-{i:05d}-{token}-c000.snappy.parquet"
+                ),
+            )
+        os.makedirs(os.path.join(work, _CDF_DIR))
+        pq.write_table(
+            cdf,
+            os.path.join(
+                work, _CDF_DIR, f"part-00000-{token}-c000.snappy.parquet"
+            ),
+        )
 
     def _land(
         self,
@@ -1934,10 +2398,7 @@ class ManagedTable:
         mapping = self.spark.createDataFrame(
             pa.table(
                 {
-                    "__norm": [
-                        "/" + os.path.abspath(r["abs"]).lstrip("/")
-                        for r in rows
-                    ],
+                    "__norm": [_norm_abs(r["abs"]) for r in rows],
                     "__file": [r["file"] for r in rows],
                 },
                 schema=pa.schema(
@@ -1947,10 +2408,14 @@ class ManagedTable:
         )
         df = df.withColumn(
             "__norm",
-            F.regexp_replace(
-                F.col("__path"),
-                "^[a-zA-Z][a-zA-Z0-9+.\\-]*:/+",
-                "/",
+            # drop the URI scheme and undo the percent-encoding as
+            # unquote does: url_decode alone would read "+" as a space
+            F.url_decode(
+                F.replace(
+                    F.regexp_replace(F.col("__path"), _URI_SCHEME, "/"),
+                    F.lit("+"),
+                    F.lit("%2B"),
+                )
             ),
         ).drop("__path")
         return df.join(F.broadcast(mapping), "__norm", "left").drop(

@@ -557,70 +557,268 @@ def test_managed_merge_composite_keys(spark, tmp_path):
         t.merge_into(df([(5, None, 1), (5, None, 2)]), ("user_id", "day"))
 
 
-def test_managed_merge_releases_cache_and_bounds_jobs(spark, tmp_path):
-    """MERGE leaves no persisted RDD behind, whether it commits or
-    refuses duplicate keys, and a fixed small merge runs a bounded
-    number of Spark jobs, so per-commit cache-fill passes cannot creep
-    back in."""
+def _jobs_in_group(spark, fn):
+    """Run ``fn`` under a fresh job group; return its result and the
+    number of Spark jobs it submitted."""
     import uuid
 
     sc = spark.sparkContext
-    t = ManagedTable(spark, str(tmp_path / "t"), index_cols=("k",))
-    t.write(_mk(spark, 0, 600).repartitionByRange(6, "k").sortWithinPartitions("k"))
+    group = f"managed-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "managed job count")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_managed_merge_releases_cache_and_bounds_jobs(
+    spark, tmp_path, monkeypatch
+):
+    """MERGE leaves no persisted RDD behind, whether it commits or
+    refuses duplicate keys, and a fixed small merge runs a bounded
+    number of Spark jobs on each plan, so per-commit cache-fill passes
+    and write jobs cannot creep back in."""
+    import bigdatalab_spark.sources.managed as managed_mod
+
+    sc = spark.sparkContext
     src = spark.createDataFrame(
         [(10, -1.0, "upd"), (20, -2.0, "upd"), (900, -9.0, "new")],
         "k long, score double, tag string",
     )
     n_cached = sc._jsc.getPersistentRDDs().size()
-    group = f"managed-merge-jobs-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "managed merge job count")
-    try:
-        v = t.merge_into(src, "k")
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    assert v == 2 and t.read().count() == 601
-    # measured: 1 source collect, 3 for attribution (two LocalRelation
-    # broadcasts and the scan), 4 for the rewrite write (a broadcast,
-    # the range sample, the shuffle map stage and the write) and 2 for
-    # the change-feed write (a broadcast and the write); the
+    # driver path, measured: 1 source collect, 1 broadcast of the
+    # source LocalRelation and 1 scan; the rewrite and change feed are
+    # written by pyarrow. Spark path (bound forced to 0), measured: 1
+    # source collect, 3 for attribution (two LocalRelation broadcasts
+    # and the scan), 4 for the rewrite write (a broadcast, the range
+    # sample, the shuffle map stage and the write) and 2 for the
+    # change-feed write (a broadcast and the write); the
     # persist-and-fill plan ran 12
-    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
-    assert 0 < n_jobs <= 10, n_jobs
-    assert sc._jsc.getPersistentRDDs().size() <= n_cached
+    for bound, most in ((managed_mod.COW_DRIVER_MAX_BYTES, 3), (0, 10)):
+        monkeypatch.setattr(managed_mod, "COW_DRIVER_MAX_BYTES", bound)
+        t = ManagedTable(
+            spark, str(tmp_path / f"t{bound}"), index_cols=("k",)
+        )
+        t.write(
+            _mk(spark, 0, 600)
+            .repartitionByRange(6, "k")
+            .sortWithinPartitions("k")
+        )
+        v, n_jobs = _jobs_in_group(spark, lambda: t.merge_into(src, "k"))
+        assert v == 2 and t.read().count() == 601
+        assert 0 < n_jobs <= most, (bound, n_jobs)
+        assert sc._jsc.getPersistentRDDs().size() <= n_cached
 
-    with pytest.raises(ValueError, match="duplicate keys"):
-        t.merge_into(src.unionAll(src), "k")
-    assert sc._jsc.getPersistentRDDs().size() <= n_cached
-    assert t.latest() == 2
+        with pytest.raises(ValueError, match="duplicate keys"):
+            t.merge_into(src.unionAll(src), "k")
+        assert sc._jsc.getPersistentRDDs().size() <= n_cached
+        assert t.latest() == 2
 
 
-def test_managed_delete_releases_cache_and_bounds_jobs(spark, tmp_path):
+def test_managed_delete_releases_cache_and_bounds_jobs(
+    spark, tmp_path, monkeypatch
+):
     """DELETE plans without a cache, as MERGE does: a range delete
     leaves no persisted RDD behind and runs a bounded number of Spark
-    jobs, so the touched-file cache and its fill job cannot creep
-    back in."""
-    import uuid
+    jobs on each plan, so the touched-file cache and its fill job
+    cannot creep back in."""
+    import bigdatalab_spark.sources.managed as managed_mod
 
     sc = spark.sparkContext
-    t = ManagedTable(spark, str(tmp_path / "t"), index_cols=("k",))
-    t.write(_mk(spark, 0, 600).repartitionByRange(6, "k").sortWithinPartitions("k"))
     n_cached = sc._jsc.getPersistentRDDs().size()
-    group = f"managed-delete-jobs-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "managed delete job count")
-    try:
-        v = t.delete_range("k", 10, 19)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    assert v == 2 and t.read().count() == 590
-    assert t.changes(2).count() == 10
-    # measured: 2 for attribution, 1 for the rewrite write and 1 for
-    # the change-feed write; the persist-and-fill plan ran 5 (one more
-    # for the cache fill)
-    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
-    assert 0 < n_jobs <= 4, n_jobs
-    assert sc._jsc.getPersistentRDDs().size() <= n_cached
+    # driver path, measured: the one scan that collects the candidate
+    # rows. Spark path (bound forced to 0), measured: 2 for
+    # attribution, 1 for the rewrite write and 1 for the change-feed
+    # write; the persist-and-fill plan ran 5 (one more for the cache
+    # fill)
+    for bound, most in ((managed_mod.COW_DRIVER_MAX_BYTES, 1), (0, 4)):
+        monkeypatch.setattr(managed_mod, "COW_DRIVER_MAX_BYTES", bound)
+        t = ManagedTable(
+            spark, str(tmp_path / f"t{bound}"), index_cols=("k",)
+        )
+        t.write(
+            _mk(spark, 0, 600)
+            .repartitionByRange(6, "k")
+            .sortWithinPartitions("k")
+        )
+        v, n_jobs = _jobs_in_group(
+            spark, lambda: t.delete_range("k", 10, 19)
+        )
+        assert v == 2 and t.read().count() == 590
+        assert t.changes(2).count() == 10
+        assert 0 < n_jobs <= most, (bound, n_jobs)
+        assert sc._jsc.getPersistentRDDs().size() <= n_cached
+
+
+def test_managed_compact_sizes_from_index(spark, tmp_path, monkeypatch):
+    """compact() sizes its output from the stored index's per-file row
+    counts instead of counting the rows in Spark: the compacted layout
+    (file count and rows) is the one the count gives, in fewer jobs. A
+    table without index columns still counts."""
+
+    def compact(name, cols):
+        t = ManagedTable(spark, str(tmp_path / name), index_cols=cols)
+        t.write(_mk(spark, 0, 1000, parts=8))
+        t.append(_mk(spark, 1000, 1050, parts=3))
+        t.delete_range("k", 100, 199)
+        v, n_jobs = _jobs_in_group(
+            spark, lambda: t.compact(target_file_rows=300)
+        )
+        files = _data_files(str(tmp_path / name / f"v={v}"))
+        return t, len(files), _rows(t.read()), n_jobs
+
+    t, n_files, rows, n_jobs = compact("indexed", ("k",))
+    assert t._indexed_row_count(t.latest() - 1) == 950
+    with monkeypatch.context() as m:
+        m.setattr(ManagedTable, "_indexed_row_count", lambda self, v: None)
+        _, n_files_c, rows_c, n_jobs_c = compact("counted", ("k",))
+    # ceil(950 / 300) files either way; the count cost 2 jobs
+    assert (n_files, rows) == (n_files_c, rows_c) and n_files == 4
+    assert n_jobs == n_jobs_c - 2, (n_jobs, n_jobs_c)
+    t, _, rows, _ = compact("plain", ())
+    assert t._indexed_row_count(t.latest()) is None
+    assert len(rows) == 950
+
+
+_COW_TYPES_DDL = (
+    "k long, k2 string, seq int, d date, ts timestamp, tn timestamp_ntz, "
+    "dec decimal(12,3), arr array<int>, m map<string,int>, "
+    "st struct<a:int,b:string>, bin binary, b boolean, f float"
+)
+
+
+def _cow_row(k, k2, seq):
+    """One row of the many-typed table; every column derives from the
+    key and ``seq`` so a change shows in every type."""
+    import datetime
+    from decimal import Decimal
+
+    i = (k or 0) + seq
+    return (
+        k, k2, seq,
+        datetime.date(2024, 1, 1) + datetime.timedelta(days=i % 300),
+        datetime.datetime(2024, 1, 1, 8) + datetime.timedelta(seconds=i),
+        datetime.datetime(2024, 2, 1) + datetime.timedelta(minutes=i),
+        Decimal(i) / 8, [i, None], {"n": i}, (i, str(i)),
+        bytes([i % 256]), i % 2 == 0, i / 4.0,
+    )
+
+
+def _canon_rows(df) -> list[str]:
+    """Order-free, hashable view of a frame's rows (maps as sorted
+    items, so nested types compare)."""
+
+    def canon(v):
+        if isinstance(v, dict):
+            return tuple(sorted((k, canon(x)) for k, x in v.items()))
+        if isinstance(v, (list, tuple)):
+            return tuple(canon(x) for x in v)
+        return v
+
+    return sorted(repr(canon(tuple(r))) for r in df.collect())
+
+
+def test_managed_cow_paths_agree(spark, tmp_path, monkeypatch):
+    """The driver copy-on-write path and the Spark plan (forced by
+    setting the bound to 0) give equal tables and equal change feeds,
+    schema and column order included, on a table of every common
+    type: MERGE unconditional and under ``when_matched``, on one and
+    on composite keys, with NULL keys, duplicate target keys, an
+    all-matched and an all-insert source; DELETE by predicate and by
+    range; UPDATE. The table path needs URI escaping."""
+    import bigdatalab_spark.sources.managed as managed_mod
+
+    table = [_cow_row(k, "ab"[k % 2], 5) for k in range(200)]
+    table += [_cow_row(7, "b", 9), _cow_row(None, "a", 1), _cow_row(None, "b", 2)]
+
+    def src(rows):
+        return spark.createDataFrame(
+            [_cow_row(k, k2, seq) for k, k2, seq in rows], _COW_TYPES_DDL
+        )
+
+    ops = [
+        # duplicate target key 7, a NULL key, a new key
+        lambda t: t.merge_into(
+            src([(10, "a", 6), (7, "x", 6), (None, "a", 6), (900, "a", 6)]), "k"
+        ),
+        # key 7's two rows are decided one by one (seq 5 loses, 9 wins)
+        lambda t: t.merge_into(
+            src([(7, "y", 8), (20, "a", 1), (21, "b", 7), (901, "a", 1)]),
+            "k",
+            when_matched="s.seq >= t.seq",
+        ),
+        # composite keys: (30, "a") does not exist, (None, "b") never matches
+        lambda t: t.merge_into(
+            src([(30, "b", 8), (30, "a", 8), (31, "b", 8), (None, "b", 8)]),
+            ("k", "k2"),
+        ),
+        # every source key matches
+        lambda t: t.merge_into(
+            src([(40, "a", 9), (41, "b", 9)]), "k", when_matched="s.seq > t.seq"
+        ),
+        # every source key is new, but the key range reaches a file
+        lambda t: t.merge_into(src([(500, "a", 1), (5001, "b", 1)]), "k"),
+        # the key range reaches no file: nothing is scanned, and an
+        # empty candidate set fits any bound, so both runs take the
+        # driver path here
+        lambda t: t.merge_into(src([(6000, "a", 1), (6001, "b", 2)]), "k"),
+        lambda t: t.delete_where("b AND k < 60"),
+        lambda t: t.delete_range("k", 100, 119),
+        lambda t: t.update_where(
+            "k BETWEEN 150 AND 160 OR k IS NULL",
+            {"f": "f * 2", "arr": F.array(F.lit(7)), "m": "map('u', seq)"},
+        ),
+        lambda t: t.update_range("k", 170, 179, {"dec": "dec + 1"}),
+    ]
+    results = {}
+    local_writes = []
+    write_local = ManagedTable._write_delta_local
+    monkeypatch.setattr(
+        ManagedTable,
+        "_write_delta_local",
+        lambda self, *a: local_writes.append(1) or write_local(self, *a),
+    )
+    for driver in (True, False):
+        if not driver:
+            monkeypatch.setattr(managed_mod, "COW_DRIVER_MAX_BYTES", 0)
+        local_writes.clear()
+        # a space, a "+" and a "%" in the table path: scanned file
+        # paths are URIs, percent-encoded, on both plans
+        t = ManagedTable(
+            spark, str(tmp_path / f"{driver} a+b%20c"), index_cols=("k",)
+        )
+        t.write(
+            spark.createDataFrame(table, _COW_TYPES_DDL)
+            .repartitionByRange(4, "k")
+            .sortWithinPartitions("k")
+        )
+        out = []
+        for op in ops:
+            v = op(t)
+            feed = t.changes(v)
+            out.append(
+                (v, _canon_rows(t.read()), feed.schema, _canon_rows(feed))
+            )
+        # the Spark run's one driver write is the no-file merge above
+        assert len(local_writes) == (len(ops) if driver else 1)
+        results[driver] = out
+    for i, (got, want) in enumerate(zip(results[True], results[False])):
+        assert got == want, f"op {i}: driver path != Spark path"
+    # the ops really exercised what they name
+    feeds = [r[3] for r in results[True]]
+    assert sum("update_preimage" in r for r in feeds[1]) == 2  # 7@5 stays
+    assert all("'insert'" in r for r in feeds[4])
+    assert not any("'insert'" in r for r in feeds[3])
+    # a type pyarrow cannot hand back to Spark unchanged keeps the
+    # Spark plan
+    from pyspark.sql import types as T
+
+    assert managed_mod._arrow_native(T.StructType.fromDDL(_COW_TYPES_DDL))
+    assert not managed_mod._arrow_native(
+        T.ArrayType(T.DayTimeIntervalType())
+    )
 
 
 def test_managed_changes_derivations(spark, tmp_path):

@@ -608,6 +608,32 @@ def test_overlap_actions_jobs_carry_callers_group_and_description(spark, tmp_pat
     assert len([j for j in tracker.getJobIdsForGroup(group) if j > last]) >= 4
 
 
+def test_overlap_actions_workers_inherit_job_tags(spark):
+    """Workers inherit the caller's job tags (``spark.addTag``), not
+    only its local properties, and wrapping them raises no "Spark
+    session is not provided" warning."""
+    import uuid
+    import warnings
+
+    from bigdatalab_spark.plans.compile import overlap_actions
+
+    tag = f"overlap-tag-{uuid.uuid4().hex[:8]}"
+
+    def probe():
+        spark.range(10).count()  # a job submitted under the tags
+        return set(spark.getTags())
+
+    spark.addTag(tag)
+    try:
+        with warnings.catch_warnings():
+            warnings.simplefilter("error")
+            seen = overlap_actions([probe, probe])
+    finally:
+        spark.removeTag(tag)
+    assert all(tag in tags for tags in seen), seen
+    assert tag not in spark.getTags()
+
+
 def test_overlap_actions_results_in_call_order_and_failure_after_all(spark):
     """Results come back in call order whatever order the callables
     finish in, and the first failure is raised only once every

@@ -31,6 +31,13 @@ Ops drawn per step (seeded PRNG — deterministic, replayable):
   clone         zero-copy shallow clone reads back the model and
                 bootstraps its own feed as all-inserts
 
+Seeds also pick the copy-on-write plan: seeds ≡ 8..15 (mod 16) force
+the Spark plan, the rest take the driver path (managed.py
+``COW_DRIVER_MAX_BYTES``) on unpartitioned tables, so 20 seeds cover
+both plans on both data planes and both lock scopes. A merge whose
+key range reaches no file scans nothing and takes the driver path
+under either choice.
+
 This is the metamorphic complement of tests/test_managed.py's
 scenario tests: those pin designed edges; the fuzzer searches the op
 lattice for sequencing bugs (index staleness after rollback+DML,
@@ -51,6 +58,22 @@ import tempfile
 
 
 def run_seed(spark, seed: int, n_ops: int) -> None:
+    """One seed's op sequence. Seeds ≡ 8..15 (mod 16) force the Spark
+    copy-on-write plan by setting the driver path's bound to 0; the
+    others take the driver path on every unpartitioned DML whose
+    candidate files fit the bound (all of them, at fuzz sizes)."""
+    import bigdatalab_spark.sources.managed as managed_mod
+
+    bound = managed_mod.COW_DRIVER_MAX_BYTES
+    if seed % 16 >= 8:
+        managed_mod.COW_DRIVER_MAX_BYTES = 0
+    try:
+        _run_seed(spark, seed, n_ops)
+    finally:
+        managed_mod.COW_DRIVER_MAX_BYTES = bound
+
+
+def _run_seed(spark, seed: int, n_ops: int) -> None:
     from pyspark.sql import functions as F
 
     from bigdatalab_spark.sources.managed import ManagedTable
